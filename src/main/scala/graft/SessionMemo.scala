@@ -40,28 +40,13 @@ object SessionMemo {
     m.computeIfAbsent(key, _ => new Lazily(() => f)).value.asInstanceOf[T]
   }
 
-  /** Drop one memoized entry — for tests that flip a session conf a
-    * memoized relation was derived under (e.g. the df-cap override);
-    * production sessions never need it. No-op if absent.
+  /** Drop one memoized entry — `Tables.load` replaces a relation
+    * whose files changed, and tests flip a session conf a memoized
+    * relation was derived under (e.g. the df-cap override). No-op if
+    * absent.
     */
   def invalidate(s: SparkSession, key: String): Unit = memos.synchronized {
     val t = memos.get(s)
     if (t != null) t.remove(key)
-  }
-
-  /** Drop every entry under `prefix` except `keep` — Tables.load uses
-    * it to evict relations memoized under a STALE file fingerprint of
-    * the same path (round-17 advisor: repeated fixture rewrites would
-    * otherwise accumulate dead entries for the session's lifetime).
-    */
-  def invalidatePrefixExcept(s: SparkSession, prefix: String, keep: String): Unit = {
-    val t = memos.synchronized(memos.get(s))
-    if (t != null) {
-      val it = t.keySet().iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k.startsWith(prefix) && k != keep) it.remove()
-      }
-    }
   }
 }

@@ -42,13 +42,19 @@ object Tables {
         // action still scans parquet (no data/result caching). The
         // fingerprint (file names/sizes/mtimes) keys out in-session
         // rewrites (fuzz/spec fixtures), matching the semantics of
-        // Spark's own catalog file-index cache.
-        val key = s"tables.rel:$path:$fp"
-        // evict relations memoized under a stale fingerprint of this
-        // path (fixture rewrites) so dead entries don't accumulate
-        SessionMemo.invalidatePrefixExcept(spark, s"tables.rel:$path:", key)
-        SessionMemo.getOrComputeAs[DataFrame](spark, key) {
-          resolve(spark, path)
+        // Spark's own catalog file-index cache. One entry per path,
+        // holding the fingerprint it was resolved under: a rewrite
+        // replaces it, so stale relations never accumulate.
+        val key = s"tables.rel:$path"
+        def memoized = SessionMemo.getOrComputeAs[(String, DataFrame)](
+          spark, key)((fp, resolve(spark, path)))
+        val (seen, rel) = memoized
+        if (seen == fp) rel
+        else {
+          SessionMemo.invalidate(spark, key)
+          val (now, fresh) = memoized
+          // a concurrent load may have memoized another fingerprint
+          if (now == fp) fresh else resolve(spark, path)
         }
       case None => resolve(spark, path) // non-local/missing: resolve raw
     }
@@ -65,11 +71,13 @@ object Tables {
   /** Cheap content fingerprint of a LOCAL parquet file/dir: xxhash-free
     * fold of (name, length, mtime) over the FULL RECURSIVE listing
     * (round-17 advisor: a one-level fold missed rewrites inside nested
-    * partition subdirectories). None when the path is not a local file
-    * — the caller then resolves uncached, preserving the pre-round-17
-    * behavior for any non-local URI.
+    * partition subdirectories). Symlinked directories below the root
+    * are folded as entries, not descended, so a link cycle cannot
+    * recurse. None when the path is not a local file — the caller then
+    * resolves uncached, preserving the pre-round-17 behavior for any
+    * non-local URI.
     */
-  private def fingerprint(path: String): Option[String] = {
+  private[graft] def fingerprint(path: String): Option[String] = {
     val f = new java.io.File(path)
     if (!f.exists()) return None
     def sig(x: java.io.File): Long = {
@@ -77,17 +85,16 @@ object Tables {
       h = h * 1000003L + x.length()
       h * 1000003L + x.lastModified()
     }
+    // x itself, then (for a directory) its subtree in name order
     def walk(x: java.io.File): Option[Seq[java.io.File]] =
-      if (x.isDirectory) {
-        val kids = x.listFiles()
-        if (kids == null) None
-        else kids.toSeq.sortBy(_.getName).foldLeft(
-          Option(Seq.empty[java.io.File])) { (acc, k) =>
-          for (a <- acc; w <- walk(k)) yield (a :+ k) ++ w
-        }
-      } else Some(Seq(x))
+      if (!x.isDirectory ||
+          (x != f && java.nio.file.Files.isSymbolicLink(x.toPath))) Some(Seq(x))
+      else Option(x.listFiles()).flatMap(_.toSeq.sortBy(_.getName)
+        .foldLeft(Option(Seq(x))) { (acc, k) =>
+          for (a <- acc; w <- walk(k)) yield a ++ w
+        })
     walk(f).map(files => java.lang.Long.toHexString(
-      (f +: files).foldLeft(1469598103934665603L)(
+      files.foldLeft(1469598103934665603L)(
         (a, x) => a * 1099511628211L ^ sig(x))))
   }
 

@@ -25,64 +25,43 @@ object PageRank {
     * directions present for an undirected graph. Returns
     * (node, score) after `k` damped iterations (d = 0.85), where
     * score ≈ 1e6 × the PageRank mass. Node set = nodes with wdeg > 0.
+    * Global PageRank is [[personalized]] with every node a seed.
     */
-  def weighted(edges: DataFrame, k: Int): DataFrame = {
+  def weighted(edges: DataFrame, k: Int): DataFrame =
+    iterate(edges, k)(_.withColumn("is_seed", lit(true)))
+
+  /** PERSONALIZED PageRank: the teleport vector concentrates on the
+    * `seeds` node set instead of spreading uniformly — scores become
+    * "relevance to the seeds" (seed-based recommendation, local
+    * community relevance) rather than global centrality. Seeds start
+    * at `Scale` (non-seeds 0) and only seeds receive the 0.15 restart
+    * mass each iteration, so every score is an exact long and the
+    * oracle replays the loop as unrolled CTEs.
+    */
+  def personalized(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame =
+    iterate(edges, k)(wdeg => wdeg
+      .join(seeds.select(col("node")).withColumn("is_seed", lit(true)),
+        Seq("node"), "left_outer")
+      .select(col("node"), col("wdeg"),
+        coalesce(col("is_seed"), lit(false)).as("is_seed")))
+
+  /** The shared loop over the (node, wdeg, is_seed) base relation that
+    * `seeded` builds from the weighted degrees.
+    */
+  private def iterate(edges: DataFrame, k: Int)(
+      seeded: DataFrame => DataFrame): DataFrame = {
     // materialize the (aggregated, node-table-sized) edge relation
-    // ONCE: it feeds wdeg, the damped-edge build, and — via wdeg —
+    // ONCE: it feeds wdeg, the damped-edge build, and — via base —
     // every iteration's re-seed join, and without the checkpoint each
     // of those replays the caller's corpus-side lineage (q96 pays the
     // full bigram scan per materialization).
     val e = edges.localCheckpoint()
     val wdeg = e.groupBy(col("src").as("node"))
       .agg(sum(col("w")).as("wdeg"))
-      .localCheckpoint()
+    val base = seeded(wdeg).localCheckpoint()
     // out-mass rate per node is loop-invariant: fold (850 * w) / wdeg
     // into the edge relation ONCE so each iteration is a single
     // join + aggregate on a pre-damped edge table.
-    val damped = e
-      .join(wdeg.withColumnRenamed("node", "src"), "src")
-      .select(col("src"), col("dst"), col("w"), col("wdeg"))
-      .localCheckpoint()
-    var scores = wdeg.select(col("node"), lit(Scale).as("score"))
-    for (i <- 1 to k) {
-      val contrib = damped
-        .join(scores.withColumnRenamed("node", "src"), "src")
-        // (850 * score * w) div (1000 * wdeg): exact integer damping
-        .select(col("dst").as("node"),
-          expr(s"(850 * score * w) div (1000 * wdeg)").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("in_mass"))
-      scores = wdeg
-        .join(contrib, Seq("node"), "left_outer")
-        .select(col("node"),
-          (lit(150L * Scale / 1000L) + coalesce(col("in_mass"), lit(0L)))
-            .as("score"))
-      // re-root lineage only every 4th iteration — a localCheckpoint
-      // per round is a full materialization, pure overhead at small k.
-      if (i % 4 == 0 && i < k) scores = scores.localCheckpoint()
-    }
-    scores
-  }
-
-  /** PERSONALIZED PageRank: the teleport vector concentrates on the
-    * `seeds` node set instead of spreading uniformly — scores become
-    * "relevance to the seeds" (seed-based recommendation, local
-    * community relevance) rather than global centrality. Same exact
-    * integer fixed-point discipline as [[weighted]]: seeds start at
-    * `Scale` (non-seeds 0) and only seeds receive the 0.15 restart
-    * mass each iteration, so every score is an exact long and the
-    * oracle replays the loop as unrolled CTEs. Same per-iteration
-    * shape (one edge⋈score join + one partial+final aggregate).
-    */
-  def personalized(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
-    val e = edges.localCheckpoint()
-    val wdeg = e.groupBy(col("src").as("node"))
-      .agg(sum(col("w")).as("wdeg"))
-    val base = wdeg
-      .join(seeds.select(col("node")).withColumn("is_seed", lit(true)),
-        Seq("node"), "left_outer")
-      .select(col("node"), col("wdeg"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint()
     val damped = e
       .join(base.select(col("node").as("src"), col("wdeg")), "src")
       .select(col("src"), col("dst"), col("w"), col("wdeg"))
@@ -92,6 +71,7 @@ object PageRank {
     for (i <- 1 to k) {
       val contrib = damped
         .join(scores.withColumnRenamed("node", "src"), "src")
+        // (850 * score * w) div (1000 * wdeg): exact integer damping
         .select(col("dst").as("node"),
           expr(s"(850 * score * w) div (1000 * wdeg)").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("in_mass"))
@@ -100,6 +80,8 @@ object PageRank {
         .select(col("node"),
           (when(col("is_seed"), lit(150L * Scale / 1000L)).otherwise(lit(0L)) +
             coalesce(col("in_mass"), lit(0L))).as("score"))
+      // re-root lineage only every 4th iteration — a localCheckpoint
+      // per round is a full materialization, pure overhead at small k.
       if (i % 4 == 0 && i < k) scores = scores.localCheckpoint()
     }
     scores
@@ -140,29 +122,9 @@ object PageRank {
     (base +: iters).mkString("WITH ", ",\n", "")
   }
 
-  /** The oracle twin: DuckDB SQL computing the same `k` iterations
-    * with identical integer arithmetic, unrolled as CTE stages.
-    * `edgesSql` must SELECT (src, dst, w).
+  /** The oracle twin of [[weighted]]: [[personalizedOracleSql]] with
+    * every node a seed. `edgesSql` must SELECT (src, dst, w).
     */
-  def oracleSql(edgesSql: String, k: Int): String = {
-    // MATERIALIZED for the same reason as [[personalizedOracleSql]]:
-    // without it DuckDB re-inlines `e` into every unrolled round.
-    val base =
-      s"""e AS MATERIALIZED ($edgesSql),
-         |wdeg AS MATERIALIZED (SELECT src AS node, sum(w) AS wdeg FROM e GROUP BY src),
-         |s0 AS MATERIALIZED (SELECT node, CAST($Scale AS BIGINT) AS score FROM wdeg)""".stripMargin
-    val iters = (1 to k).map { i =>
-      s"""s$i AS MATERIALIZED (
-         |  SELECT wdeg.node,
-         |    ${150L * Scale / 1000L} + coalesce(m.in_mass, 0) AS score
-         |  FROM wdeg LEFT JOIN (
-         |    SELECT e.dst AS node,
-         |      sum((850 * s.score * e.w) // (1000 * d.wdeg)) AS in_mass
-         |    FROM e
-         |    JOIN s${i - 1} s ON s.node = e.src
-         |    JOIN wdeg d ON d.node = e.src
-         |    GROUP BY e.dst) m ON m.node = wdeg.node)""".stripMargin
-    }
-    (base +: iters).mkString("WITH ", ",\n", "")
-  }
+  def oracleSql(edgesSql: String, k: Int): String =
+    personalizedOracleSql(edgesSql, "SELECT node FROM wdeg", k)
 }

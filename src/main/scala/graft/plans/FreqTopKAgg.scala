@@ -70,11 +70,11 @@ case class FreqTopK(
     else if (!capExpr.foldable || capExpr.dataType != IntegerType)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName: capacity must be an INT literal")
-    else if (capExpr.eval().asInstanceOf[Number].intValue() <
-      kExpr.eval().asInstanceOf[Number].intValue())
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: capacity must be >= k")
-    else TypeCheckResult.TypeCheckSuccess
+    else (kExpr.eval(), capExpr.eval()) match {
+      case (k: Int, c: Int) if k >= 1 && c >= k => TypeCheckResult.TypeCheckSuccess
+      case (k, c) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName: need non-null 1 <= k <= capacity, got k = $k, capacity = $c")
+    }
 
   override def createAggregationBuffer(): FreqBuffer = new FreqBuffer(cap)
 

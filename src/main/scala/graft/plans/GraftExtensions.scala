@@ -142,12 +142,6 @@ object GraftFunctions {
       new ExpressionInfo(classOf[VecQMilli].getName, "vec_qmilli"),
       (children: Seq[Expression]) => VecQMilli(children(0), children(1)))
 
-  val topkStrDescriptor: Descriptor =
-    (FunctionIdentifier("topk_by_score_str"),
-      new ExpressionInfo(classOf[TopKByScoreStr].getName, "topk_by_score_str"),
-      (children: Seq[Expression]) =>
-        TopKByScoreStr(children(0), children(1), children(2)))
-
   val lcpTokensDescriptor: Descriptor =
     (FunctionIdentifier("lcp_tokens"),
       new ExpressionInfo(classOf[LcpTokens].getName, "lcp_tokens"),
@@ -160,7 +154,7 @@ object GraftFunctions {
       fuzzyMatchDescriptor, freqTopkDescriptor, gramSumsDescriptor,
       mix64Descriptor, portableHash64Descriptor,
       vecDotDescriptor, vecDistSqDescriptor,
-      vecQMilliDescriptor, lcpTokensDescriptor, topkStrDescriptor)
+      vecQMilliDescriptor, lcpTokensDescriptor)
 
   /** Idempotent per-session registration: the native functions plus
     * the similarity-join optimizer rule (the in-library twin of the
@@ -194,17 +188,11 @@ object GraftFunctions {
   def simhashAgg(h: Column): Column = call_function("simhash_agg", h)
 
   /** Column-API form of the bounded top-k aggregate: best k
-    * (score DESC, id ASC) pairs as a sorted struct array.
+    * (score DESC, id ASC) pairs as a sorted struct array; the id is
+    * BIGINT or STRING (binary UTF-8 order).
     */
   def topkByScore(score: Column, id: Column, k: Int): Column =
     call_function("topk_by_score", score, id,
-      org.apache.spark.sql.functions.lit(k))
-
-  /** String-id sibling of [[topkByScore]] — best k
-    * (score DESC, id ASC by binary UTF-8) pairs.
-    */
-  def topkByScoreStr(score: Column, id: Column, k: Int): Column =
-    call_function("topk_by_score_str", score, id,
       org.apache.spark.sql.functions.lit(k))
 
   /** Column-API form of the similarity-join predicate: exact

@@ -26,12 +26,17 @@ case class VecQMilli(left: Expression, right: Expression)
 
   override def prettyName: String = "vec_qmilli"
 
-  private def isFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private def isFloat: Boolean = left.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
 
-  override def dataType: DataType =
-    ArrayType(LongType,
-      containsNull = left.dataType.asInstanceOf[ArrayType].containsNull)
+  // checkInputDataTypes rejects a non-array input; until then (some
+  // analyzer paths ask for dataType first) report a nullable array
+  override def dataType: DataType = left.dataType match {
+    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
+    case _ => ArrayType(LongType, containsNull = true)
+  }
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {

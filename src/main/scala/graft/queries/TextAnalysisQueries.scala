@@ -813,8 +813,8 @@ object TextAnalysisQueries {
             ((col("c_sv") + 1L) * (col("n") - col("n_s") + col("v"))).cast("double") /
             ((col("n_s") + col("v")) * (col("c_v") - col("c_sv") + 1L)).cast("double")))
             .cast("long").as("delta_micro")))
-    // per-source top-5 via the BOUNDED string-id top-k aggregate
-    // (round 18; guide §2.4): one partial-aggregable groupBy — ≤ 5
+    // per-source top-5 via the BOUNDED top-k aggregate with string
+    // ids (guide §2.4): one partial-aggregable groupBy — ≤ 5
     // pairs of state per (partition, source) — replaces the
     // range-repartition ranking machinery (range exchange + pid
     // window + boundary-offset broadcast join, ~6 stages). delta fits
@@ -823,7 +823,7 @@ object TextAnalysisQueries {
     // 5·|sources| winners re-fetch c_sv on a broadcast equi join.
     graft.plans.GraftFunctions.register(s)
     val winners = sc.groupBy(col("source"))
-      .agg(graft.plans.GraftFunctions.topkByScoreStr(
+      .agg(graft.plans.GraftFunctions.topkByScore(
         col("delta_micro").cast("double"), col("term"), 5).as("tk"))
       .select(col("source"), posexplode(col("tk")).as(Seq("pos", "e")))
       .select(col("source"), (col("pos") + 1L).as("rn"),

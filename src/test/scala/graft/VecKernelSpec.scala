@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import graft.plans.GraftFunctions
 
 /** Round-18 native kernels: lcp_tokens (token-level LCP over
@@ -10,6 +13,9 @@ import graft.plans.GraftFunctions
   * the vec_dot/vec_distsq length/null semantics must match the
   * aggregate(zip_with(...)) forms they stand in for (round-17 ADVICE:
   * a shorter right or a null element yields NULL, never a crash).
+  * The bounded top-k aggregate must equal `row_number()` for both id
+  * types, and bad parameters of the bounded aggregates and kernels
+  * must fail analysis, not the run.
   */
 class VecKernelSpec extends SparkSpec {
 
@@ -89,27 +95,68 @@ class VecKernelSpec extends SparkSpec {
     assert(r.getLong(2) == 11L, "longer right still dots over left length")
   }
 
-  test("topk_by_score_str equals row_number (score DESC, id ASC) per group") {
+  test("topk_by_score equals row_number (score DESC, id ASC) for BIGINT and STRING ids") {
+    import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(7)
     val rows = Seq.tabulate(500) { i =>
       (s"g${i % 4}", s"t${rnd.nextInt(40)}_${i % 7}", rnd.nextInt(20).toLong)
     }
-    val df = rows.toDF("g", "term", "score")
-      .groupBy(col("g"), col("term")).agg(max(col("score")).as("score"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("g"))
-      .orderBy(col("score").desc, col("term"))
-    val want = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("g"), col("rn").cast("long").as("rn"), col("term"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    val got = df.groupBy(col("g"))
-      .agg(GraftFunctions.topkByScoreStr(
-        col("score").cast("double"), col("term"), 5).as("tk"))
-      .select(col("g"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("g"), (col("pos") + 1L).as("rn"), col("e.id").as("term"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    assert(got == want)
+    val raw = rows.toDF("g", "term", "score")
+    // signed BIGINT ids with many score ties, so the id order decides
+    Seq("STRING" -> col("term"), "BIGINT" -> xxhash64(col("term")) % 1000L)
+      .foreach { case (idType, idCol) =>
+        val df = raw.withColumn("id", idCol)
+          .groupBy(col("g"), col("id")).agg(max(col("score")).as("score"))
+        val w = Window.partitionBy(col("g"))
+          .orderBy(col("score").desc, col("id"))
+        val want = df.withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= 5)
+          .select(col("g"), col("rn").cast("long").as("rn"), col("id"))
+          .collect().map(r => (r.getString(0), r.getLong(1), r.get(2))).toSet
+        val got = df.groupBy(col("g"))
+          .agg(GraftFunctions.topkByScore(
+            col("score").cast("double"), col("id"), 5).as("tk"))
+          .select(col("g"), posexplode(col("tk")).as(Seq("pos", "e")))
+          .select(col("g"), (col("pos") + 1L).as("rn"), col("e.id").as("id"))
+          .collect().map(r => (r.getString(0), r.getLong(1), r.get(2))).toSet
+        assert(want.size == 20, s"$idType: degenerate fixture")
+        assert(got == want, s"$idType ids")
+      }
+  }
+
+  private def analysisError(sql: String): String =
+    intercept[AnalysisException](spark.sql(sql)).getMessage
+
+  test("topk_by_score rejects k < 1, a null or non-literal k and a DOUBLE id at analysis") {
+    val t = "VALUES (1.0D, 1L, 3) AS t(s, i, n)"
+    Seq(
+      "topk_by_score(s, i, 0)" -> "k must be a non-null INT literal >= 1",
+      "topk_by_score(s, i, -1)" -> "k must be a non-null INT literal >= 1",
+      "topk_by_score(s, i, CAST(NULL AS INT))" -> "k must be a non-null INT literal >= 1",
+      "topk_by_score(s, i, n)" -> "k must be an INT literal",
+      "topk_by_score(s, s, 3)" -> "id must be BIGINT or STRING, got DOUBLE")
+      .foreach { case (call, want) =>
+        val msg = analysisError(s"SELECT $call FROM $t")
+        assert(msg.contains(want), s"$call: $msg")
+      }
+  }
+
+  test("freq_topk rejects k < 1 and a null k at analysis") {
+    val t = "VALUES ('a') AS t(w)"
+    Seq("freq_topk(w, 0, 0)", "freq_topk(w, 0, 16)", "freq_topk(w, -1, 16)",
+      "freq_topk(w, CAST(NULL AS INT), 16)").foreach { call =>
+      val msg = analysisError(s"SELECT $call FROM $t")
+      assert(msg.contains("need non-null 1 <= k <= capacity"), s"$call: $msg")
+    }
+  }
+
+  test("vec_qmilli rejects a non-array input with its type-check message") {
+    val msg = analysisError("SELECT vec_qmilli(1.0D, 1.0D)")
+    assert(msg.contains("vec_qmilli requires (array<float|double>, double)"), msg)
+    // asking for dataType before the type check must not throw
+    val q = graft.plans.VecQMilli(Literal(1.0), Literal(1.0))
+    assert(q.dataType == ArrayType(LongType, containsNull = true))
+    assert(q.checkInputDataTypes().isFailure)
   }
 
   test("vec_dot: null element in range yields NULL (fold semantics)") {
