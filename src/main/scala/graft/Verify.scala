@@ -9,14 +9,7 @@ object Verify {
     // optional third arg: comma-separated query names — dev-only
     // single-query iteration; the driver always calls with two args
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // metadata-sized unpartitioned windows are structurally gated in
     // PlanSpec; the per-operator WindowExec WARN is noise here

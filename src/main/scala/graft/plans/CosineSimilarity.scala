@@ -48,23 +48,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
   private def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    CosineSimilarity.requireSameDim(n, b.numElements())
-    val leftFloat = elemType(left) == FloatType
-    val rightFloat = elemType(right) == FloatType
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x: Double = if (leftFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y: Double = if (rightFloat) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / math.sqrt(na * nb)
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.cosine(
+      l.asInstanceOf[ArrayData], elemType(left) == FloatType,
+      r.asInstanceOf[ArrayData], elemType(right) == FloatType)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val lGet = if (elemType(left) == FloatType) "getFloat" else "getDouble"
@@ -97,6 +84,24 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  /** The interpreted arithmetic, also called row-free by q200's MMR
+    * greedy; `doGenCode` spells the same loop in Java.
+    */
+  def cosine(a: ArrayData, aFloat: Boolean,
+      b: ArrayData, bFloat: Boolean): Double = {
+    val n = a.numElements()
+    requireSameDim(n, b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x: Double = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y: Double = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / math.sqrt(na * nb)
+  }
+
   /** Shared by interpreted eval and generated code (called from the
     * codegen'd loop header by its JVM name — keep it a static-style
     * object method).

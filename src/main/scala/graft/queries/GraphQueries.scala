@@ -280,28 +280,21 @@ object GraphQueries {
     // checkpoint-on 2.5–3.2 s vs fused 3.1–6.2 s there, so the old
     // 8192 bar (below sf0.1's row count) mis-chose fused; 65536
     // keeps sf1's measured fused win while fixing sf0.1.
-    // `spark.graft.lpa.checkpoint` = on|off overrides for A/B runs.
     // (no pre-partitioning or re-checkpoint on e2: pairSupport is
     // already a memoized localCheckpoint, so the symmetrized view is
     // two cheap scans of it; and the label relation broadcasts —
     // ~|nodes| rows — so the per-round join moves no edge bytes; the
     // one real per-round exchange is the (src,lbl) majority count)
-    val perRoundCheckpoint =
-      s.conf.getOption("spark.graft.lpa.checkpoint").getOrElse("auto") match {
-        case "on" => true
-        case "off" => false
-        case _ =>
-          // part-table row count is the cheap estimate (metadata-only
-          // parquet count); a fixture dir without part.parquet falls
-          // back to the exact distinct node count, memoized alike
-          val nodes = scala.util.Try(
-            graft.api.AutoTune.corpusRows(s, d, "part")).getOrElse(
-            graft.SessionMemo.getOrComputeAs[Long](s, s"lpa.nodes:$d") {
-              Tables.lineitem(s, d).select(col("l_partkey"))
-                .distinct().count()
-            })
-          nodes <= 65536L
-      }
+    // part-table row count is the cheap estimate (metadata-only
+    // parquet count); a fixture dir without part.parquet falls back to
+    // the exact distinct node count, memoized alike
+    val nodes = scala.util.Try(
+      graft.api.AutoTune.corpusRows(s, d, "part")).getOrElse(
+      graft.SessionMemo.getOrComputeAs[Long](s, s"lpa.nodes:$d") {
+        Tables.lineitem(s, d).select(col("l_partkey"))
+          .distinct().count()
+      })
+    val perRoundCheckpoint = nodes <= 65536L
     val ed = MiningQueries.pairSupport(s, d).select(col("u"), col("v"))
     val e2 = ed.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(ed.select(col("v").as("src"), col("u").as("dst")))

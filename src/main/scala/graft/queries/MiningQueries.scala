@@ -199,7 +199,7 @@ object MiningQueries {
       // subqueries emit all 10 profile rows even over EMPTY tables
       // (n_distinct 0, containment NULL), so the profiled pair list —
       // not the data — must drive the output (fuzz class C)
-      broadcast(pairList)
+      pairList
         .join(nd, col("cid") === col("fk_col"), "left_outer")
         .join(inter, Seq("fk_col", "pk_col"), "left_outer")
         .select(col("fk_col"), col("pk_col"),

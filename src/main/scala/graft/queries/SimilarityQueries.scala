@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.plans.GraftFunctions
+import graft.plans.{CosineSimilarity, GraftFunctions}
 
 /** Similarity search over `embeddings.embedding` (north-star
   * "similarity search"): brute-force cosine top-k as the correctness
@@ -1030,11 +1031,14 @@ object SimilarityQueries {
     * Scale shape: the EXPENSIVE part is candidate generation — one
     * broadcast-query pass with the bounded partial `topk_by_score`
     * aggregate (never a corpus window). Everything after is bounded
-    * by queries×20 candidates: the pairwise-sim relation and the 5
-    * greedy rounds are metadata joins, localCheckpointed so one lazy
-    * DAG doesn't re-run candidate generation per round. At 100 TB the
-    * candidate stage rides the IVF index (q39) unchanged; the MMR
-    * tail is corpus-independent.
+    * by queries×20 candidates: the candidates (broadcast) pick up
+    * their vectors in one map-side pass over the embeddings, which
+    * quantizes only the matched rows; they gather per query, and one
+    * task per query runs the 5-step greedy ([[mmrGreedy]], ≤ 20·4
+    * pairwise cosines), so the whole query is one lazy plan with no
+    * driver loop or checkpoint. At 100 TB the candidate stage rides
+    * the IVF index (q39) unchanged; the MMR tail adds that one
+    * embeddings scan, and its greedy is corpus-independent.
     */
   val q200MmrDiversified: QueryDef = {
     def step(i: Int): String = {
@@ -1093,47 +1097,56 @@ object SimilarityQueries {
         .agg(GraftFunctions.topkByScore(col("cs"), col("vec_id"), 20).as("top"))
         .select(col("q_id"), explode(col("top")).as("e"))
         .select(col("q_id"), col("e.id").as("n_id"), col("e.score").as("csq"))
-        .localCheckpoint()
-      // pairwise candidate similarities: (queries × 20 × 19) rows
-      val pairs = cand.alias("a")
-        .join(cand.alias("b"),
-          col("a.q_id") === col("b.q_id") && col("a.n_id") =!= col("b.n_id"))
-        .join(t.select(col("vec_id").as("xid"), col("qv").as("xv")),
-          col("a.n_id") === col("xid"))
-        .join(t.select(col("vec_id").as("yid"), col("qv").as("yv")),
-          col("b.n_id") === col("yid"))
-        .select(col("a.q_id").as("q_id"), col("a.n_id").as("x"),
-          col("b.n_id").as("y"),
-          GraftFunctions.cosineSim(col("xv"), col("yv")).as("cp"))
-        .localCheckpoint()
-      // step 1: pure relevance argmax (S is empty); ties to n_id asc
-      // via the inverted min_by key (the q199 argmax convention)
-      var sel = cand.groupBy(col("q_id"))
-        .agg(min_by(struct(col("n_id"), (lit(0.7) * col("csq")).as("score")),
-          struct((-col("csq")).as("k"), col("n_id"))).as("m"))
-        .select(col("q_id"), col("m.n_id").as("n_id"), lit(1L).as("rank"),
-          col("m.score").as("score"))
-        .localCheckpoint()
-      for (i <- 2 to 5) {
-        val m = pairs
-          .join(sel.select(col("q_id"), col("n_id").as("y")), Seq("q_id", "y"))
-          .groupBy(col("q_id"), col("x")).agg(max(col("cp")).as("ms"))
-          .withColumnRenamed("x", "n_id")
-        val scored = cand.join(m, Seq("q_id", "n_id"))
-          .join(sel.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"),
-            "left_anti")
-          .select(col("q_id"), col("n_id"),
-            (lit(0.7) * col("csq") - lit(0.3) * col("ms")).as("score"))
-        val pick = scored.groupBy(col("q_id"))
-          .agg(min_by(struct(col("n_id"), col("score")),
-            struct((-col("score")).as("k"), col("n_id"))).as("m"))
-          .select(col("q_id"), col("m.n_id").as("n_id"),
-            lit(i.toLong).as("rank"), col("m.score").as("score"))
-        sel = sel.unionAll(pick).localCheckpoint()
-      }
-      sel.select(col("q_id"), col("rank"), col("n_id"),
-        round(col("score"), 6).as("mmr_score"))
+      // the MMR tail: each query's ≤ 20 candidates pick up their
+      // vectors (quantized after the join, so only matched rows are)
+      // and are greedily diversified inside one task
+      import s.implicits._
+      Tables.embeddings(s, d).join(broadcast(cand), col("vec_id") === col("n_id"))
+        .groupBy(col("q_id"))
+        .agg(collect_list(struct(col("n_id"), col("csq"),
+          GraftFunctions.quantizeI8(col("embedding")))).as("c"))
+        .flatMap { r =>
+          val c = r.getSeq[Row](1).map(e => (e.getLong(0), e.getDouble(1),
+            ArrayData.toArrayData(e.getSeq[Double](2).toArray)))
+          mmrGreedy(c, 5).zipWithIndex.map { case ((n, score), i) =>
+            (r.getLong(0), i + 1L, n, score)
+          }
+        }
+        .select(col("_1").as("q_id"), col("_2").as("rank"), col("_3").as("n_id"),
+          round(col("_4"), 6).as("mmr_score"))
         .orderBy(col("q_id"), col("rank"))
+    }
+  }
+
+  /** q200's greedy over one query's candidates (n_id, csq, qv): rank 1
+    * is the csq argmax, each later rank the argmax of
+    * 0.7·csq − 0.3·max_{s∈S} cos(x, s) over the candidates not yet
+    * picked, ties to the lower n_id. Keys are negated and compared
+    * as Spark orders doubles (`SQLOrderingUtil.compareDoubles`: NaN
+    * greatest, −0.0 = 0.0), so a NaN score (a zero vector) ranks
+    * last. Candidates are sorted by n_id and each max over S is
+    * folded in rank order, so the picks do not depend on the input
+    * order. Returns min(k, |cand|) (n_id, score) pairs in rank order.
+    */
+  private def mmrGreedy(cand: Seq[(Long, Double, ArrayData)],
+      k: Int): Seq[(Long, Double)] = {
+    val c = cand.sortBy(_._1).toIndexedSeq
+    val ms = Array.fill(c.length)(Double.NegativeInfinity)
+    val picked = Array.fill(c.length)(false)
+    (0 until math.min(k, c.length)).map { rank =>
+      def score(i: Int): Double =
+        if (rank == 0) 0.7 * c(i)._2 else 0.7 * c(i)._2 - 0.3 * ms(i)
+      def key(i: Int): Double = if (rank == 0) -c(i)._2 else -score(i)
+      val best = c.indices.filterNot(picked(_)).reduce { (a, b) =>
+        if (SQLOrderingUtil.compareDoubles(key(b), key(a)) < 0) b else a
+      }
+      picked(best) = true
+      val pick = (c(best)._1, score(best))
+      c.indices.filterNot(picked(_)).foreach { i =>
+        val cp = CosineSimilarity.cosine(c(i)._3, false, c(best)._3, false)
+        if (SQLOrderingUtil.compareDoubles(cp, ms(i)) > 0) ms(i) = cp
+      }
+      pick
     }
   }
 

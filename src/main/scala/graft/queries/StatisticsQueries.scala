@@ -640,8 +640,7 @@ object StatisticsQueries {
     // LEFT join: on single-class input n_pos = 0 matches no cum row —
     // the q137/q138 convention is a row with a NULL metric, never an
     // empty result, so the lookup must not filter the counts away
-    val idcg = broadcast(n)
-      .join(broadcast(cum),
+    val idcg = n.join(broadcast(cum),
         col("i") === least(col("n_pos"), lit(NdcgK.toLong)), "left_outer")
       .select(col("cv").as("idcg_micro"))
     broadcast(n).crossJoin(broadcast(dcg)).crossJoin(broadcast(idcg))
@@ -2141,7 +2140,7 @@ object StatisticsQueries {
         sum(col("y")).as("sy"), sum(col("y") * col("y")).as("ss"))
     def side(a: Int, c: String, alias: String) =
       max(when(col("arm") === a, col(c))).as(alias)
-    val t = broadcast(BhTypes.toDF("event_type"))
+    val t = BhTypes.toDF("event_type")
       .join(cell, Seq("event_type"), "left_outer")
       .groupBy(col("event_type"))
       .agg(coalesce(side(0, "n", "x0"), lit(0L)).as("n0"),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of one registered
   * query (or all, with "all") — the `.explain("formatted")` loop the
   * build process runs after each operator lands.
@@ -12,13 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q08_star_schema")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     val targets =
       if (name == "all") graft.Registry.queries.map(_.name)

@@ -41,14 +41,7 @@ object FuzzData {
     val (src, out, variant) = (args(0), args(1), args(2))
     val seed = args.lift(3).map(_.toLong).getOrElse(14L)
     require(Variants.contains(variant), s"unknown variant $variant")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, out, variant, seed)
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-session driver for the differential fuzz harness: for each
   * [[FuzzData]] variant, generate the mutated corpus and dump every
   * registered query + its oracle SQL through `graft.Verify.run` —
@@ -15,14 +13,7 @@ object FuzzRun {
   def main(args: Array[String]): Unit = {
     val (src, work) = (args(0), args(1))
     val seed = args.lift(2).map(_.toLong).getOrElse(14L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",

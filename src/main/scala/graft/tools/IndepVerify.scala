@@ -187,15 +187,7 @@ object IndepVerify {
     val outJson = args(2)
     val copies = args.lift(3).map(_.toInt).getOrElse(100)
     val sliceRem = 7L // deterministic; any copy index works
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.GraftFunctions.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.api.MemoCatalog
@@ -40,12 +39,7 @@ object MemoRacer {
     val tag = args(2)
     val phases = args(3).toInt
     val reads = args(4).toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"memo-racer-$tag")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create("local[2]")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set(MemoCatalog.DirConf, root)
     import spark.implicits._

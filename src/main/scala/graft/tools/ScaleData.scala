@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-ladder data generator: replicates a driver sf directory by an
@@ -85,14 +85,7 @@ object ScaleData {
     require(f <= 432 || tables.exists(t => !t.contains("documents")),
       s"factor $f > 432 exceeds the distinct affine-map count for documents.text " +
         "(cross-copy near-dup structure would repeat); pass a table subset excluding documents")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
 
     def wanted(t: String): Boolean = tables.forall(_.contains(t))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time one (or more) registered queries in isolation
   * with the exact Bench session config — for chasing per-query
   * regressions without paying the full 79-query run.
@@ -26,15 +24,7 @@ object TimeQuery {
     val names = args.headOption.getOrElse("q34_minhash_lsh").split(",").toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF="k=v;k=v" sets session confs before timing —
     // e.g. the LSH banding overrides (spark.graft.lsh.*) for

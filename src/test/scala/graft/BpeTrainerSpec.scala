@@ -76,26 +76,6 @@ class BpeTrainerSpec extends SparkSpec {
       "newest newest newest newest",
       "widest widest widest").toDF("text").localCheckpoint()
 
-    def jobsDuring(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // listener delivery is async: wait until the count quiesces.
-        var last = -1L
-        var spins = 0
-        while (last != n.get() && spins < 20) {
-          last = n.get(); Thread.sleep(150); spins += 1
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
-
     val j2 = jobsDuring(BpeTrainer.train(corpus, "text", 2))
     val j16 = jobsDuring(BpeTrainer.train(corpus, "text", 16))
     // cost is the one word-frequency collect, INDEPENDENT of merge

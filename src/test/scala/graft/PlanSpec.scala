@@ -673,4 +673,36 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"queries windowing uncompressed data in one partition: ${offenders.mkString(", ")}")
   }
+
+  test("q119/q152/q251 plan with no unsupported join-hint warning") {
+    // Spark drops a broadcast() on the preserved side of an outer join
+    // and says so through HintErrorLogger at physical planning
+    val msgs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "hint-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        msgs.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.catalyst.analysis.HintErrorLogger")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(org.apache.logging.log4j.Level.WARN)
+    try {
+      Seq("q119_fk_discovery", "q152_ndcg_eval", "q251_fdr_control").foreach { q =>
+        Registry.byName(q).fn(spark, sfDir).queryExecution.executedPlan
+      }
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    val unsupported =
+      msgs.toArray.map(_.toString).filter(_.contains("is not supported"))
+    assert(unsupported.isEmpty,
+      s"hints Spark dropped: ${unsupported.mkString("; ")}")
+  }
 }

@@ -33,14 +33,8 @@ class ResilienceSpec extends AnyFunSuite {
   test("a task killed on its first attempt is retried and the shuffle job still answers exactly") {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    val s = SparkSession.builder()
-      .master("local[4, 3]") // 4 threads, up to 3 attempts per task
-      .appName("graft-resilience")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 4 threads, up to 3 attempts per task
+    val s = GraftSession.create("local[4, 3]")
     try {
       s.sparkContext.setLogLevel("WARN")
       import s.implicits._

@@ -8,17 +8,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * fork; getOrCreate dedups across suites).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create("local[4]",
+    Some("target/spark-warehouse"))
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. */
+  protected def jobsDuring(body: => Unit): Long = {
+    val n = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener delivery is async: wait until the count quiesces.
+      var last = -1L
+      var spins = 0
+      while (last != n.get() && spins < 20) {
+        last = n.get(); Thread.sleep(150); spins += 1
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

@@ -25,18 +25,17 @@ class VectorSearchSpec extends SparkSpec {
   private def cos(a: Array[Double], b: Array[Double]): Double =
     dot(a, b) / math.sqrt(dot(a, a) * dot(b, b))
 
-  test("q200 MMR matches a driver-side greedy recompute") {
-    val got = Registry.byName("q200_mmr_diversified").fn(spark, sfDir)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    val qv = quantized(sfDir)
-    val want = (0L until 5L).flatMap { q =>
+  /** Driver-side q200: per query (vec_id < 5) the cosine top-20
+    * candidates, then min(5, |cand|) greedy MMR steps, ties to n_id.
+    */
+  private def mmrRecompute(dir: String): Seq[(Long, Long, Long, Double)] = {
+    val qv = quantized(dir)
+    (0L until 5L).filter(qv.contains).flatMap { q =>
       val cand = qv.keys.filter(_ != q).toSeq
         .map(n => n -> cos(qv(q), qv(n)))
         .sortBy { case (n, c) => (-c, n) }.take(20)
       val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      for (step <- 1 to 5) {
+      for (step <- 1 to math.min(5, cand.size)) {
         val rem = cand.filterNot(c => sel.exists(_._1 == c._1))
         val pick = rem.map { case (n, cq) =>
           val pen =
@@ -48,6 +47,20 @@ class VectorSearchSpec extends SparkSpec {
       }
       sel.zipWithIndex.map { case ((n, sc), i) => (q, (i + 1).toLong, n, sc) }
     }
+  }
+
+  private def mmrRows(dir: String): Seq[(Long, Long, Long, Double)] =
+    Registry.byName("q200_mmr_diversified").fn(spark, dir)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+
+  test("q200 MMR matches a driver-side greedy recompute") {
+    val got = Registry.byName("q200_mmr_diversified").fn(spark, sfDir)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+    val want = mmrRecompute(sfDir)
     // ids/ranks exact; scores to 1e-9 (the emitted column is round(·,6),
     // whose decimal-digit tie behavior this recompute doesn't replicate)
     assert(got.map(r => (r._1, r._2, r._3)) == want.map(r => (r._1, r._2, r._3)))
@@ -66,6 +79,73 @@ class VectorSearchSpec extends SparkSpec {
       assert(sel.find(_._2 == 1L).get._3 == best,
         s"rank-1 of query $q must be the plain cosine argmax")
     }
+  }
+
+  /** Runs `body` on a fresh temporary directory, deleted afterwards. */
+  private def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.getAbsolutePath)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("q200 runs in at most 10 Spark jobs, full output written") {
+    val jobs = withTempDir("graft_q200_jobs") { out =>
+      jobsDuring {
+        Registry.byName("q200_mmr_diversified").fn(spark, sfDir)
+          .write.parquet(s"$out/out")
+      }
+    }
+    assert(jobs <= 10, s"q200 ran $jobs jobs")
+  }
+
+  /** Runs `body` on a temporary directory holding `vecs` as the
+    * embeddings table, vec_id 0, 1, ...
+    */
+  private def withEmbeddings[T](prefix: String, vecs: Seq[Array[Float]])(
+      body: String => T): T = withTempDir(prefix) { dir =>
+    spark.createDataFrame(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+      .toDF("vec_id", "embedding")
+      .write.parquet(s"$dir/embeddings.parquet")
+    body(dir)
+  }
+
+  private def assertMatchesRecompute(dir: String): Seq[(Long, Long, Long)] = {
+    val got = mmrRows(dir)
+    val want = mmrRecompute(dir)
+    assert(got.map(r => (r._1, r._2, r._3)) == want.map(r => (r._1, r._2, r._3)))
+    got.zip(want).foreach { case (g, w) =>
+      assert(math.abs(g._4 - w._4) < 1e-6, s"score drift at $g vs $w")
+    }
+    got.map(r => (r._1, r._2, r._3))
+  }
+
+  test("q200 emits |cand| rows per query when fewer than 5 candidates exist") {
+    val got = withEmbeddings("graft_mmr_small", Seq(
+      Array(1f, 0f, 0f), Array(1f, 1f, 0f), Array(0f, 1f, 1f), Array(1f, 0f, 1f)))(
+      assertMatchesRecompute)
+    assert(got.groupBy(_._1).map { case (q, r) => q -> r.length } ==
+      (0L until 4L).map(_ -> 3).toMap, s"each query has 3 candidates: $got")
+  }
+
+  test("q200 breaks equal scores toward the lower n_id (duplicate vectors)") {
+    val a = Array(1f, 0f, 0f, 0f); val b = Array(1f, 1f, 0f, 0f)
+    val c = Array(0f, 1f, 1f, 0f); val e = Array(0f, 0f, 1f, 1f)
+    // ids: 0 a, 1 b, 2 b, 3 c, 4 c, 5 a, 6 e, 7 e
+    val got = withEmbeddings("graft_mmr_dup", Seq(a, b, b, c, c, a, e, e))(
+      assertMatchesRecompute)
+    val twins = Seq((1L, 2L), (3L, 4L), (6L, 7L), (0L, 5L))
+    got.groupBy(_._1).foreach { case (q, rows) =>
+      val rank = rows.map(r => r._3 -> r._2).toMap
+      twins.filter { case (lo, hi) => lo != q && hi != q }.foreach {
+        case (lo, hi) =>
+          rank.get(hi).foreach { rh =>
+            assert(rank.get(lo).exists(_ < rh),
+              s"query $q picked $hi at rank $rh before its twin $lo")
+          }
+      }
+    }
+    assert(got.exists { case (q, _, n) => q != 1L && q != 2L && n == 1L },
+      s"fixture must pick a tied twin: $got")
   }
 
   /** Driver-side PQ: anchors by mix64 order, per-subspace argmin
