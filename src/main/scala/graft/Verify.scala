@@ -21,11 +21,13 @@ object Verify {
   }
 
   /** The dump itself, session-agnostic (tests drive it with the shared
-    * session; `main` owns session lifecycle).
+    * session; `main` owns session lifecycle). Returns the message of
+    * each query that failed, by name.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      only: Option[Set[String]] = None): Unit = {
+      only: Option[Set[String]] = None): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
+    val failed = Map.newBuilder[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -33,6 +35,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name -> String.valueOf(e.getMessage)
       }
       // release query-scoped persisted inputs (dedup shingle postings):
       // one shared session runs all 59 queries, so per-query caches
@@ -55,5 +58,6 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    failed.result()
   }
 }

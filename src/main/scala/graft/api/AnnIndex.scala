@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.plans.GraftFunctions
 import graft.queries.SimilarityQueries
 
-/** Durable IVF index for approximate nearest-neighbor search — the
-  * storage-layout half of q39's in-memory IVF, and the similarity
-  * twin of [[IncrementalDedup]]'s durable MinHash index:
+/** Durable IVF index for approximate nearest-neighbor search — q39's
+  * IVF steps ([[SimilarityQueries.assignCells]], `probeCells`,
+  * `rerankTopk`) over a cell layout on disk, and the similarity twin
+  * of [[IncrementalDedup]]'s durable MinHash index:
   *
   *   - `build` trains k centroids (Lloyd, deterministic seeds, the
   *     q39 trainer) and writes every vector into its nearest-centroid
@@ -24,9 +25,10 @@ import graft.queries.SimilarityQueries
   * reads the corpus per query batch, while this layout reads
   * ~nprobe/k of it (directory-pruned, so it's file listing + column
   * pruning on top). Recall/IO trade is the (k, nprobe) knob pair,
-  * same as q39. `AnnIndexSpec` pins: search ≡ in-memory IVF on the
-  * same cells, scan touches only probed directories, recall@10 vs
-  * brute force, and append-then-search finds the appended vectors.
+  * same as q39. `AnnIndexSpec` pins: search at q39's (k, iters,
+  * nprobe) returns q39's rows, scan touches only probed directories,
+  * recall@10 vs brute force, append-then-search finds the appended
+  * vectors, and each write adds one file per touched cell.
   */
 object AnnIndex {
 
@@ -38,16 +40,23 @@ object AnnIndex {
     val s = t.sparkSession
     val cents = SimilarityQueries.trainCentroids(s, t, k, iters)
     cents.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-    assignedTo(cents, t).write.mode(SaveMode.Overwrite)
-      .partitionBy("c_id").parquet(s"$dir/cells")
+    writeCells(SimilarityQueries.assignCells(t, cents, "embedding"),
+      s"$dir/cells", SaveMode.Overwrite)
   }
 
   /** Assign a new batch with the STORED centroids and append its
     * vectors to the cell directories (append-only, no rewrite).
     */
   def append(s: SparkSession, dir: String, batch: DataFrame): Unit =
-    assignedTo(s.read.parquet(s"$dir/centroids"), batch)
-      .write.mode(SaveMode.Append).partitionBy("c_id").parquet(s"$dir/cells")
+    writeCells(SimilarityQueries.assignCells(batch,
+      s.read.parquet(s"$dir/centroids"), "embedding"), s"$dir/cells", SaveMode.Append)
+
+  /** The one cell write of build, append and compact: rows are
+    * clustered by `c_id` first, so a write adds one file per cell it
+    * touches, not one per cell per write task.
+    */
+  private def writeCells(cells: DataFrame, path: String, mode: SaveMode): Unit =
+    cells.repartition(col("c_id")).write.mode(mode).partitionBy("c_id").parquet(path)
 
   /** Tombstone-delete: record the ids in `dir/tombstones` (append-only
     * — no cell rewrite, the same O(batch) cost as a CDC delete row in
@@ -74,7 +83,7 @@ object AnnIndex {
     val kept = s.read.parquet(s"$dir/cells")
       .join(ts, Seq("vec_id"), "left_anti")
     val tmp = s"$dir/cells_compact"
-    kept.write.mode(SaveMode.Overwrite).partitionBy("c_id").parquet(tmp)
+    writeCells(kept, tmp, SaveMode.Overwrite)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tmp), s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/cells"), true)
@@ -102,17 +111,8 @@ object AnnIndex {
   def search(s: SparkSession, dir: String, queries: DataFrame,
       nprobe: Int, topk: Int): DataFrame = {
     GraftFunctions.register(s)
-    val cents = s.read.parquet(s"$dir/centroids")
-    // per-query probe cells: argmax over the broadcast centroid set
-    val probes = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("qe"), col("ce")))
-      .groupBy(col("q_id"))
-      .agg(first(col("qe")).as("qe"),
-        GraftFunctions.topkByScore(col("csim"), col("c_id").cast("long"), nprobe)
-          .as("pc"))
-      .select(col("q_id"), col("qe"), explode(col("pc.id")).as("c_id"))
-      .withColumn("c_id", col("c_id").cast("int"))
+    val probes = SimilarityQueries.probeCells(queries,
+      s.read.parquet(s"$dir/centroids"), nprobe)
     // the UNION of probed cells is bounded by k (collect is ≤ k ints —
     // driver metadata, same class as the centroids themselves); the
     // isin filter is a PARTITION filter on the cell scan, so unprobed
@@ -126,29 +126,6 @@ object AnnIndex {
     val cells = tombstones(s, dir)
       .map(ts => cells0.join(ts, Seq("vec_id"), "left_anti"))
       .getOrElse(cells0)
-    probes.join(cells, "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cs", GraftFunctions.cosineSim(col("qe"), col("embedding")))
-      .groupBy(col("q_id"))
-      .agg(GraftFunctions.topkByScore(col("cs"), col("vec_id"), topk).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("q_id"), col("t.id").as("n_id"),
-        round(col("t.score"), 6).as("cos_sim"),
-        (col("i") + 1).cast("int").as("rn"))
-      .orderBy(col("q_id"), col("rn"))
-  }
-
-  /** Nearest-centroid assignment via the broadcast partial-aggregable
-    * argmax (no corpus shuffle; ties to the lowest centroid id).
-    */
-  private def assignedTo(cents: DataFrame, t: DataFrame): DataFrame = {
-    GraftFunctions.register(t.sparkSession)
-    t.crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding")),
-        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.c_id").as("c_id"))
+    SimilarityQueries.rerankTopk(probes.join(cells, "c_id"), "qe", "embedding", topk)
   }
 }

@@ -102,6 +102,23 @@ object AutoTune {
     math.max(16L,
       math.min(math.ceil(math.sqrt(n.toDouble)).toLong, n / 32L)).toInt
 
+  /** Session conf that pins the IVF cell count of q191, q203, q228 and
+    * q236 over the derived [[isolationK]].
+    */
+  private[graft] val IsolationKConf = "spark.graft.isolation.k"
+
+  /** The IVF cell count for the embeddings under `dir`: the session's
+    * [[IsolationKConf]] when set, else [[isolationK]] of the corpus
+    * row count. Fails unless it is at least 1 (k = 0 would train from
+    * no seed centroids).
+    */
+  private[graft] def isolationKFor(s: SparkSession, dir: String): Int = {
+    val k = s.conf.getOption(IsolationKConf).map(_.toInt)
+      .getOrElse(isolationK(corpusRows(s, dir)))
+    require(k >= 1, s"invalid $IsolationKConf=$k")
+    k
+  }
+
   /** Inverted-index document-frequency cap: max(floor, ⌈√P⌉) for a
     * P-row postings relation — the third corpus-derived parameter
     * family (round-11 verdict task 6), closing the last fixed

@@ -197,22 +197,23 @@ object BpeTrainer {
     */
   def tokenCounts(
       df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[Merge]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ordered = merges.sortBy(_.rank).map(m => (m.left, m.right))
-    df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val words = text.split(" ").filter(_.nonEmpty)
-        val n = words.iterator.map { w =>
-          var syms: Seq[String] = charSyms(w)
-          ordered.foreach { case (l, r) => syms = applyMerge(syms, l, r) }
-          syms.length.toLong
-        }.sum
-        (id, n)
-      }
-      .toDF(idCol, "n_bpe_tokens")
+      merges: Seq[Merge]): DataFrame =
+    encode(df, idCol, textCol, merges)
+      .select(col(idCol), size(col("bpe_tokens")).cast("long").as("n_bpe_tokens"))
+
+  /** A word encoder for one partition: the ordered merges applied to a
+    * word's codepoint symbols, memoized per distinct word — word
+    * frequencies are Zipfian, so the merge loop runs once per distinct
+    * word per partition (exactly what production tokenizers do).
+    * `ordered` is the merge list as (left, right) pairs in rank order.
+    */
+  private[graft] def wordEncoder(ordered: Seq[(String, String)]): String => Seq[String] = {
+    val cache = scala.collection.mutable.HashMap.empty[String, Seq[String]]
+    w => cache.getOrElseUpdate(w, {
+      var syms: Seq[String] = charSyms(w)
+      ordered.foreach { case (l, r) => syms = applyMerge(syms, l, r) }
+      syms
+    })
   }
 
   /** Full corpus ENCODING: applies the ordered merge list and emits
@@ -221,10 +222,8 @@ object BpeTrainer {
     *
     * Scale shape: merges are bounded metadata captured into the
     * closure (Spark broadcasts task binaries); encoding is a pure
-    * per-partition map with a per-partition WORD memo — word
-    * frequencies are Zipfian, so the cache collapses the per-word
-    * merge loop to one execution per distinct word per partition
-    * (exactly what production tokenizers do). No shuffle at all.
+    * per-partition map through one [[wordEncoder]] per partition. No
+    * shuffle at all.
     */
   def encode(
       df: DataFrame, idCol: String, textCol: String,
@@ -235,12 +234,7 @@ object BpeTrainer {
     df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
-        val cache = scala.collection.mutable.HashMap.empty[String, Seq[String]]
-        def enc(w: String): Seq[String] = cache.getOrElseUpdate(w, {
-          var syms: Seq[String] = charSyms(w)
-          ordered.foreach { case (l, r) => syms = applyMerge(syms, l, r) }
-          syms
-        })
+        val enc = wordEncoder(ordered)
         it.map { case (id, text) =>
           (id, text.split(" ").filter(_.nonEmpty).toSeq.flatMap(enc))
         }

@@ -53,25 +53,23 @@ object IncrementalDedup {
     * would re-run the whole postings pipeline for the second file.
     */
   def writeIndex(docs: DataFrame, dir: String): Unit =
-    withPostings(docs) { posts =>
-      DedupQueries.minhashBandsOf(posts).write.mode(SaveMode.Overwrite)
-        .partitionBy("band").parquet(s"$dir/bands")
-      DedupQueries.shingleSetsOf(posts).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/shingles")
-    }
+    withPostings(docs)(writeFrom(_, dir, SaveMode.Overwrite))
 
   /** Index maintenance: fold a new (already-deduped) batch INTO the
     * stored index so later batches dedup against it too. Append-only
     * parquet — no rewrite of the existing 100 TB index.
     */
   def appendIndex(newDocs: DataFrame, dir: String): Unit =
-    withPostings(newDocs)(appendFrom(_, dir))
+    withPostings(newDocs)(writeFrom(_, dir, SaveMode.Append))
 
-  private[graft] def appendFrom(posts: DataFrame, dir: String): Unit = {
-    DedupQueries.minhashBandsOf(posts).write.mode(SaveMode.Append)
+  /** The one index write of build and append. Band rows are clustered
+    * by `band` first, so a write adds one file per band it touches,
+    * not one per band per write task.
+    */
+  private[graft] def writeFrom(posts: DataFrame, dir: String, mode: SaveMode): Unit = {
+    DedupQueries.minhashBandsOf(posts).repartition(col("band")).write.mode(mode)
       .partitionBy("band").parquet(s"$dir/bands")
-    DedupQueries.shingleSetsOf(posts).write.mode(SaveMode.Append)
-      .parquet(s"$dir/shingles")
+    DedupQueries.shingleSetsOf(posts).write.mode(mode).parquet(s"$dir/shingles")
   }
 
   /** Shingle postings computed once and persisted for the scope of

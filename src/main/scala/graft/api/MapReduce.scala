@@ -110,9 +110,9 @@ object MapReduce {
     * generic contract above: input records are (filename, contents),
     * map emits lowercase alnum-run tokens with count 1, reduce sums.
     * Folding is the SIMPLE 1:1 mapping (İ pre-substituted before the
-    * JVM lower — `functions.TextFunctions.FoldConf`'s round-17
-    * default), matching the reference's `towlower` (mapper.c:28) and
-    * the `wordcount` query's default byte-for-byte on every input.
+    * JVM lower, as in `functions.TextFunctions.tokensSimple`), matching
+    * the reference's `towlower` (mapper.c:28) and the `wordcount`
+    * query byte-for-byte on every input.
     */
   def wordCount(spark: SparkSession, dir: String): Dataset[(String, Long)] = {
     import spark.implicits._

@@ -18,37 +18,21 @@ object TextFunctions {
   val TokenDelim = "[^\\p{L}\\p{N}]+"
 
   /** Lowercased token array of a text column (reference `map()`,
-    * `mapper.c:14-42`). Empty tokens from leading delimiters are kept
-    * here; callers filter (`mapper.c:32` drops them).
-    */
-  def tokens(text: Column): Column = split(lower(text), TokenDelim)
-
-  /** One row per non-empty token — the reference's flatMap contract. */
-  def explodeTokens(text: Column): Column = explode(tokens(text))
-
-  /** Case-fold mode conf: `simple` (default since round 17 — the 1:1
-    * UnicodeData.txt mapping: what C `towlower` (the reference,
-    * mapper.c:28), utf8proc, and therefore DuckDB's `lower()` apply)
-    * or `full` (the JVM's full Unicode lowercase, SpecialCasing.txt
-    * included). The two differ on exactly one non-locale lowercase
-    * mapping: U+0130 İ, which full-cases to "i"+U+0307 (two
-    * codepoints) but simple-folds to "i". Defaulting to the
-    * locale-independent simple fold makes the engine match BOTH the
-    * reference and the oracle on every input — it closed the last
-    * red fuzz-matrix cell (the wordcount İ cell, documented r14–r16);
-    * `full` remains the opt-in for JVM-ecosystem-identical folding.
-    */
-  val FoldConf = "spark.graft.fold"
-
-  /** [[tokens]] under SIMPLE case folding: İ→i pre-substituted (the
-    * sole toLowerCase special mapping), then the JVM lower — equal to
-    * utf8proc's simple fold on all inputs the full/simple modes
-    * disagree on.
+    * `mapper.c:14-42`) under SIMPLE case folding: the 1:1
+    * UnicodeData.txt mapping that C `towlower` (the reference,
+    * mapper.c:28), utf8proc, and therefore DuckDB's `lower()` apply.
+    * It differs from the JVM's full lowercase on exactly one
+    * non-locale mapping, U+0130 İ (full: "i"+U+0307, two codepoints;
+    * simple: "i"), so İ→i is pre-substituted before the JVM lower.
+    * Empty tokens from leading delimiters are kept here; callers
+    * filter (`mapper.c:32` drops them).
     */
   def tokensSimple(text: Column): Column =
     split(lower(translate(text, "İ", "i")), TokenDelim)
 
-  /** [[explodeTokens]] under simple folding (see [[FoldConf]]). */
+  /** One row per token of [[tokensSimple]] — the reference's flatMap
+    * contract.
+    */
   def explodeTokensSimple(text: Column): Column = explode(tokensSimple(text))
 
   /** Whitespace token count without exploding (cheap path for quality

@@ -422,7 +422,7 @@ object AggregatorQueries {
     * count relation; the 24 learned merges are bounded metadata
     * captured into a map-side pass with a per-partition word memo
     * (Zipf collapses the merge loop to once per distinct word per
-    * partition — the [[graft.api.BpeTrainer.encode]] discipline);
+    * partition — [[graft.api.BpeTrainer.wordEncoder]]);
     * the final aggregate is |languages| rows. Nothing shuffles but
     * the word counts. Training itself is the memoized
     * [[corpusMerges]] q95 already pays.
@@ -467,19 +467,12 @@ object AggregatorQueries {
       .select(col("lang"),
         explode(filter(split(col("text"), " "), t => length(t) > 0)).as("w"))
       .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("n"))
-    // vocab-bounded merge application: map-side with a per-partition
-    // word memo (the BpeTrainer.encode discipline)
+    // vocab-bounded merge application: map-side through one
+    // BpeTrainer word encoder (a per-distinct-word memo) per partition
     val perWord = lw.as[(String, String, Long)].mapPartitions { it =>
-      val cache = scala.collection.mutable.HashMap.empty[String, Long]
-      def nTok(w: String): Long = cache.getOrElseUpdate(w, {
-        // codepoint symbols, never UTF-16 units (BpeTrainer.charSyms)
-        var syms: Seq[String] = graft.api.BpeTrainer.charSyms(w)
-        ordered.foreach { case (l, r) =>
-          syms = graft.api.BpeTrainer.applyMerge(syms, l, r) }
-        syms.length.toLong
-      })
+      val enc = graft.api.BpeTrainer.wordEncoder(ordered)
       it.map { case (lang, w, n) =>
-        (lang, n, n * nTok(w), n * w.getBytes("UTF-8").length.toLong) }
+        (lang, n, n * enc(w).length, n * w.getBytes("UTF-8").length.toLong) }
     }.toDF("lang", "nw", "nt", "nb")
     perWord.groupBy(col("lang"))
       .agg(sum(col("nw")).as("n_words"), sum(col("nt")).as("n_tokens"),

@@ -54,16 +54,7 @@ object SimilarityQueries {
     val t = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val q = t.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    t.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cs", GraftFunctions.cosineSim(col("qe"), col("embedding")))
-      .groupBy(col("q_id"))
-      .agg(GraftFunctions.topkByScore(col("cs"), col("vec_id"), 10).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("q_id"), col("t.id").as("n_id"),
-        round(col("t.score"), 6).as("cos_sim"),
-        (col("i") + 1).cast("int").as("rn"))
-      .orderBy(col("q_id"), col("rn"))
+    rerankTopk(t.crossJoin(broadcast(q)), "qe", "embedding", 10)
   }
 
   /** Lloyd's k-means on the embedding table, cosine metric. The
@@ -114,6 +105,60 @@ object SimilarityQueries {
     finally { sample.unpersist(blocking = false); () }
   }
 
+  /** Nearest-cell assignment, the one IVF assign step (Lloyd loop,
+    * q39, q89, q191, q203, q228, q236, `AnnIndex`): every `t` row
+    * (`vec_id`, `embedding`, `carry`...) goes to its most
+    * cosine-similar centroid of `cents` (`c_id`, `ce`) in one broadcast
+    * pass with a partial-aggregable `max_by` argmax — no window
+    * shuffle of the corpus; ties go to the lowest `c_id`. Output:
+    * `vec_id`, the `carry` columns, `c_id`.
+    */
+  private[graft] def assignCells(
+      t: DataFrame, cents: DataFrame, carry: String*): DataFrame = {
+    GraftFunctions.register(t.sparkSession)
+    t.crossJoin(broadcast(cents))
+      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
+      .groupBy(col("vec_id"))
+      .agg(max_by(struct(col("c_id") +: carry.map(col): _*),
+        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
+      .select(col("vec_id") +: carry.map(c => col(s"best.$c").as(c)) :+
+        col("best.c_id").as("c_id"): _*)
+  }
+
+  /** The IVF probe: each query (`q_id`, `qe`) probes its `nprobe`
+    * most cosine-similar cells — a bounded top-k over the broadcast
+    * centroid set (k rows per query). Output: one (`q_id`, `qe`,
+    * `c_id`) row per probed cell.
+    */
+  private[graft] def probeCells(
+      queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    queries.crossJoin(broadcast(cents))
+      .withColumn("csim", GraftFunctions.cosineSim(col("qe"), col("ce")))
+      .groupBy(col("q_id"))
+      .agg(first(col("qe")).as("qe"),
+        GraftFunctions.topkByScore(col("csim"), col("c_id").cast("long"), nprobe)
+          .as("pc"))
+      .select(col("q_id"), col("qe"), explode(col("pc.id")).as("c_id"))
+      .withColumn("c_id", col("c_id").cast("int"))
+
+  /** Exact rerank of candidate rows carrying `q_id`, `vec_id` and the
+    * query and candidate vectors (columns `qv`, `v`): the self pair is
+    * dropped, and the bounded top-k aggregate keeps each query's `k`
+    * best cosines. Output: (`q_id`, `n_id`, `cos_sim` rounded to 6
+    * places, `rn`) ordered by (`q_id`, `rn`).
+    */
+  private[graft] def rerankTopk(
+      cand: DataFrame, qv: String, v: String, k: Int): DataFrame =
+    cand.filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cs", GraftFunctions.cosineSim(col(qv), col(v)))
+      .groupBy(col("q_id"))
+      .agg(GraftFunctions.topkByScore(col("cs"), col("vec_id"), k).as("top"))
+      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "t")))
+      .select(col("q_id"), col("t.id").as("n_id"),
+        round(col("t.score"), 6).as("cos_sim"),
+        (col("i") + 1).cast("int").as("rn"))
+      .orderBy(col("q_id"), col("rn"))
+
   /** Memoized CORPUS centroids per (session, dir, k, iters) — the
     * training loop's cost is ~6 sequential driver-synchronized rounds
     * (a fixed per-round overhead that dwarfs its compute at bench
@@ -154,13 +199,9 @@ object SimilarityQueries {
       // per (partition, cell) crosses the exchange — the posexplode →
       // per-component groupBy idiom this replaces shuffled dim× rows
       // over one more exchange per Lloyd pass
-      val means = t.crossJoin(broadcast(cdf))
-        .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("qv")),
-          struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-        .groupBy(col("best.c_id").as("c_id"))
-        .agg(GraftFunctions.vectorSum(col("best.qv")).as("vs"),
+      val means = assignCells(t, cdf, "qv")
+        .groupBy(col("c_id"))
+        .agg(GraftFunctions.vectorSum(col("qv")).as("vs"),
           count(lit(1)).as("n"))
         .collect().map { r =>
           val n = r.getLong(2)
@@ -281,38 +322,11 @@ object SimilarityQueries {
     GraftFunctions.register(s)
     val t = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val cents = corpusCentroids(s, d, k = 16, iters = 6)
-    // assign: nearest centroid by cosine — partial-aggregable argmax,
-    // no window shuffle of the corpus
-    val assigned = t.crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding")),
-        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.c_id").as("c_id"))
-    // queries probe their 7 nearest centroids (16 rows per query —
-    // topk over the broadcast centroid set)
-    val probes = t.filter(col("vec_id") >= 20 && col("vec_id") < 30)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("qe"), col("ce")))
-      .groupBy(col("q_id"))
-      .agg(first(col("qe")).as("qe"),
-        GraftFunctions.topkByScore(col("csim"), col("c_id").cast("long"), 7).as("pc"))
-      .select(col("q_id"), col("qe"), explode(col("pc.id")).as("c_id"))
-      .withColumn("c_id", col("c_id").cast("int"))
-    // candidates = vectors in probed cells; exact rerank via the same
-    // bounded top-k aggregate
-    probes.join(assigned, "c_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cs", GraftFunctions.cosineSim(col("qe"), col("embedding")))
-      .groupBy(col("q_id"))
-      .agg(GraftFunctions.topkByScore(col("cs"), col("vec_id"), 10).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("q_id"), col("t.id").as("n_id"),
-        round(col("t.score"), 6).as("cos_sim"),
-        (col("i") + 1).cast("int").as("rn"))
-      .orderBy(col("q_id"), col("rn"))
+    val probes = probeCells(t.filter(col("vec_id") >= 20 && col("vec_id") < 30)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe")), cents, 7)
+    // candidates = vectors in probed cells, reranked exactly
+    rerankTopk(probes.join(assignCells(t, cents, "embedding"), "c_id"),
+      "qe", "embedding", 10)
   }
 
   /** Deterministic gaussian hyperplanes for signed-random-projection
@@ -533,16 +547,7 @@ object SimilarityQueries {
       .select(col("vec_id"), GraftFunctions.quantizeI8(col("embedding")).as("qv"))
     val q = t.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("qv").as("qqv"))
-    t.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cs", GraftFunctions.cosineSim(col("qqv"), col("qv")))
-      .groupBy(col("q_id"))
-      .agg(GraftFunctions.topkByScore(col("cs"), col("vec_id"), 10).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("q_id"), col("t.id").as("n_id"),
-        round(col("t.score"), 6).as("cos_sim"),
-        (col("i") + 1).cast("int").as("rn"))
-      .orderBy(col("q_id"), col("rn"))
+    rerankTopk(t.crossJoin(broadcast(q)), "qqv", "qv", 10)
   }
 
   /** SemDeDup core (cluster-then-dedup, Abbas et al. 2023): k-means
@@ -568,13 +573,8 @@ object SimilarityQueries {
     // one assignment pass, shared by pair generation (twice inside
     // the salted self-join) and the final keep/drop join
     val assigned = graft.AutoUnpersist.scoped(
-      t.crossJoin(broadcast(cents))
-        .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("embedding")),
-          struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-        .select(col("vec_id"), col("best.c_id").as("label"),
-          col("best.embedding").as("embedding")))
+      assignCells(t, cents, "embedding")
+        .select(col("vec_id"), col("c_id").as("label"), col("embedding")))
     val dropped = DedupQueries
       .saltedLabelPairs(assigned, DedupQueries.MaxLabelBlock)
       .filter(round(GraftFunctions.cosineSim(col("ea"), col("eb")), 4)
@@ -600,13 +600,8 @@ object SimilarityQueries {
       GraftFunctions.register(s)
       val t = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val cents = corpusCentroids(s, d, k = 16, iters = 4)
-      t.crossJoin(broadcast(cents))
-        .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("c_id"), col("embedding")),
-          struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-        .select(col("vec_id"), col("best.c_id").as("label"),
-          col("best.embedding").as("embedding"))
+      assignCells(t, cents, "embedding")
+        .select(col("vec_id"), col("c_id").as("label"), col("embedding"))
         .localCheckpoint()
     }
 
@@ -980,18 +975,10 @@ object SimilarityQueries {
     GraftFunctions.register(s)
     // corpus-derived k (≈√N) unless the session conf pins it — the
     // same override-beats-derivation precedence as the LSH banding
-    val k = s.conf.getOption("spark.graft.isolation.k").map(_.toInt)
-      .getOrElse(graft.api.AutoTune.isolationK(graft.api.AutoTune.corpusRows(s, d)))
-    require(k >= 1, s"invalid spark.graft.isolation.k=$k")
+    val k = graft.api.AutoTune.isolationKFor(s, d)
     val t = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cents = corpusCentroids(s, d, k = k, iters = 6)
-    val assigned = t.crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding")),
-        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.c_id").as("c_id"))
+    val assigned = assignCells(t, corpusCentroids(s, d, k = k, iters = 6),
+      "embedding")
     val bs = assigned.as("a")
       .join(assigned.as("b"), col("a.c_id") === col("b.c_id") &&
         col("a.vec_id") =!= col("b.vec_id"))
@@ -1327,17 +1314,10 @@ object SimilarityQueries {
        |WHERE rn <= 50
        |ORDER BY rn""".stripMargin) { (s, d) =>
     GraftFunctions.register(s)
-    val k = s.conf.getOption("spark.graft.isolation.k").map(_.toInt)
-      .getOrElse(graft.api.AutoTune.isolationK(graft.api.AutoTune.corpusRows(s, d)))
+    val k = graft.api.AutoTune.isolationKFor(s, d)
     val t = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val cents = corpusCentroids(s, d, k = k, iters = 6)
-    val assigned = t.crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding")),
-        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.c_id").as("c_id"))
+    val assigned = assignCells(t, corpusCentroids(s, d, k = k, iters = 6),
+      "embedding")
     // in-cell top-3 neighbor lists: bounded partial aggregate, the
     // pair stage is Σ|cell|² on the ≈√N-cell assignment
     val nb = assigned.as("a")
@@ -1484,18 +1464,12 @@ object SimilarityQueries {
        |FROM negs
        |ORDER BY anchor, rn""".stripMargin) { (s, d) =>
     GraftFunctions.register(s)
-    val k = s.conf.getOption("spark.graft.isolation.k").map(_.toInt)
-      .getOrElse(graft.api.AutoTune.isolationK(graft.api.AutoTune.corpusRows(s, d)))
+    val k = graft.api.AutoTune.isolationKFor(s, d)
     val t = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
-    val cents = corpusCentroids(s, d, k = k, iters = 6)
-    val assigned = t.crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding"), col("label")),
-        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.c_id").as("c_id"), col("best.label").as("label"))
+    val assigned = assignCells(t, corpusCentroids(s, d, k = k, iters = 6),
+        "embedding", "label")
+      .select(col("vec_id"), col("embedding"), col("c_id"), col("label"))
     assigned.as("a")
       .join(assigned.as("b"), col("a.c_id") === col("b.c_id") &&
         col("a.vec_id") =!= col("b.vec_id") &&
@@ -1665,21 +1639,15 @@ object SimilarityQueries {
        |WHERE bu.margin_bp > 10000
        |ORDER BY src_id""".stripMargin) { (s, d) =>
     GraftFunctions.register(s)
-    val k = s.conf.getOption("spark.graft.isolation.k").map(_.toInt)
-      .getOrElse(graft.api.AutoTune.isolationK(graft.api.AutoTune.corpusRows(s, d)))
+    val k = graft.api.AutoTune.isolationKFor(s, d)
     val t = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), (col("label") % 2).as("side"))
     val cents = corpusCentroids(s, d, k = k, iters = 6)
     // the assignment+quantization pipeline feeds both join sides —
     // persist for the query's scope so the broadcast argmax runs once
-    val assigned = graft.AutoUnpersist.scoped(t.crossJoin(broadcast(cents))
-      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding"), col("side")),
-        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.c_id").as("c_id"),
-        col("best.embedding").cast("array<double>").as("v"),
-        col("best.side").as("side"))
+    val assigned = graft.AutoUnpersist.scoped(assignCells(t, cents, "embedding", "side")
+      .select(col("vec_id"), col("c_id"),
+        col("embedding").cast("array<double>").as("v"), col("side"))
       .withColumn("nrm2", GraftFunctions.vecDot(col("v"), col("v")))
       .filter(col("nrm2") > 0)
       .select(col("vec_id"), col("c_id"), col("side"),

@@ -15,13 +15,11 @@ object TextQueries {
     * one declarative plan; Spark's partial+final HashAggregate is the
     * mapper combiner (mapper.c:75-88) + reducer merge (reducer.c:23-38).
     *
-    * Case folding follows [[TextFunctions.FoldConf]]: default `simple`
-    * since round 17 — the locale-independent 1:1 mapping (İ→i) that C
-    * `towlower` (the reference, mapper.c:28) and DuckDB's utf8proc
-    * `lower()` both apply, so the default engine output hash-matches
+    * Case folding is the locale-independent SIMPLE 1:1 mapping (İ→i)
+    * that C `towlower` (the reference, mapper.c:28) and DuckDB's
+    * utf8proc `lower()` both apply, so the engine output hash-matches
     * the oracle on EVERY corpus including fuzz-unicode (the formerly
-    * red İ cell). `spark.graft.fold=full` opts back into the JVM's
-    * full Unicode lowercase (İ → "i"+U+0307) for JVM-ecosystem parity.
+    * red İ cell).
     */
   val wordcount = QueryDef(
     "wordcount",
@@ -32,12 +30,8 @@ object TextQueries {
       |WHERE word <> ''
       |GROUP BY word
       |ORDER BY word""".stripMargin) { (s, d) =>
-    val words =
-      if (s.conf.get(TextFunctions.FoldConf, "simple") == "full")
-        TextFunctions.explodeTokens(col("text"))
-      else TextFunctions.explodeTokensSimple(col("text"))
     Tables.documents(s, d)
-      .select(words.as("word"))
+      .select(TextFunctions.explodeTokensSimple(col("text")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))

@@ -877,7 +877,8 @@ object StreamingOps {
             new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
           val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_batches/$id")
           if (!fs.exists(marker)) {
-            graft.api.IncrementalDedup.appendFrom(posts, indexDir)
+            graft.api.IncrementalDedup.writeFrom(posts, indexDir,
+              org.apache.spark.sql.SaveMode.Append)
             fs.create(marker, true).close()
           }
         }

@@ -455,22 +455,17 @@ object IndepVerify {
 
   private def verifyQ236(s: SparkSession, d: String, work: String,
       record: (String, Seq[(String, Any)]) => Unit): Unit = {
-    import graft.plans.GraftFunctions
-    val k = graft.api.AutoTune.isolationK(graft.api.AutoTune.corpusRows(s, d))
-    val cents = graft.queries.SimilarityQueries.corpusCentroids(s, d, k = k, iters = 6)
+    val k = graft.api.AutoTune.isolationKFor(s, d)
+    val centsDf = graft.queries.SimilarityQueries.corpusCentroids(s, d, k = k, iters = 6)
+    val cents = centsDf
       .collect().map(x => (x.getInt(0), x.getSeq[Double](1).toArray)).sortBy(_._1)
     // engine-side materialization: assignment + quantization + pairs
     val t = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), (col("label") % 2).as("side"))
-    val centsDf = graft.queries.SimilarityQueries.corpusCentroids(s, d, k = k, iters = 6)
-    val assigned = t.crossJoin(broadcast(centsDf))
-      .withColumn("csim", GraftFunctions.cosineSim(col("embedding"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("c_id"), col("embedding"), col("side")),
-        struct(col("csim"), (-col("c_id")).as("nc"))).as("best"))
-      .select(col("vec_id"), col("best.c_id").as("c_id"),
-        col("best.embedding").cast("array<double>").as("v"),
-        col("best.side").as("side"))
+    val assigned = graft.queries.SimilarityQueries
+      .assignCells(t, centsDf, "embedding", "side")
+      .select(col("vec_id"), col("c_id"),
+        col("embedding").cast("array<double>").as("v"), col("side"))
       .withColumn("nrm2", aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x))
       .filter(col("nrm2") > 0)
       .select(col("vec_id"), col("c_id"), col("side"),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -17,7 +15,7 @@ class AnnIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("ann-index").toString
+    val d = tempDir("ann-index")
     val t = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     AnnIndex.build(t, d, k = 16, iters = 4)
@@ -89,8 +87,52 @@ class AnnIndexSpec extends SparkSpec {
     assert(bad == 0, s"$bad reranked scores diverge from direct cosine")
   }
 
+  test("search at q39's config returns exactly q39_ann_ivf's rows") {
+    val d = tempDir("ann-q39")
+    AnnIndex.build(Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding")), d, k = 16, iters = 6)
+    val got = AnnIndex.search(spark, d, queriesDF, nprobe = 7, topk = 10)
+      .collect().toSeq
+    val want = Registry.byName("q39_ann_ivf").fn(spark, sfDir).collect().toSeq
+    assert(want.size == 100, s"q39 emitted ${want.size} rows")
+    assert(got == want, s"index-only ${got.diff(want).take(5)}, " +
+      s"q39-only ${want.diff(got).take(5)}")
+  }
+
+  test("build and each append add one data file per touched cell") {
+    // no partition coalescing: every shuffle keeps 4 write tasks
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val d = tempDir("ann-files")
+      val t = Tables.embeddings(spark, sfDir)
+        .select(col("vec_id"), col("embedding"))
+      AnnIndex.build(t, d, k = 16, iters = 4)
+      var before = dataFilesPerDir(s"$d/cells")
+      assert(before.nonEmpty && before.values.forall(_ == 1),
+        s"build wrote $before")
+      for (round <- 1 to 2) {
+        val batch = t.select((col("vec_id") + 100000L * round).as("vec_id"),
+          transform(col("embedding"), x => x * lit(1.000001f)).as("embedding"))
+        AnnIndex.append(spark, d, batch)
+        val touched = spark.read.parquet(s"$d/cells")
+          .filter(col("vec_id") >= 100000L * round &&
+            col("vec_id") < 100000L * (round + 1))
+          .select(col("c_id")).distinct().as[Int].collect()
+          .map(c => s"c_id=$c").toSet
+        val now = dataFilesPerDir(s"$d/cells")
+        assert(touched.size > 1, s"append $round touched $touched")
+        now.foreach { case (cell, n) =>
+          val added = n - before.getOrElse(cell, 0)
+          assert(added == (if (touched(cell)) 1 else 0),
+            s"append $round added $added files to $cell")
+        }
+        before = now
+      }
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+  }
+
   test("delete-then-search never returns tombstoned ids; compact preserves results") {
-    val d = Files.createTempDirectory("ann-delete").toString
+    val d = tempDir("ann-delete")
     val t = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     AnnIndex.build(t, d, k = 16, iters = 4)
@@ -128,7 +170,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("append-then-search finds vectors added after the build") {
-    val d = Files.createTempDirectory("ann-append").toString
+    val d = tempDir("ann-append")
     val t = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     AnnIndex.build(t, d, k = 16, iters = 4)

@@ -198,8 +198,7 @@ class AnnotationSpec extends SparkSpec {
 
   test("q237 fixture poles: unanimous items score kappa=alpha=10000; random labels score ~0") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kappa")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_kappa")
     // 20 items × 3 raters, everyone agrees; two labels used across
     // items so chance agreement is not 1 (kappa would be 0/0 on a
     // single-label corpus — that degenerate pole is the NULL guard)
@@ -250,8 +249,7 @@ class AnnotationSpec extends SparkSpec {
 
     // planted fixture: rater 99 contradicts every 3-rater consensus,
     // raters 1-3 always agree — the audit must separate them cleanly
-    val dir = java.nio.file.Files.createTempDirectory("graft_rater")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_rater")
     val rows = for (i <- 0L until 10L; r <- Seq(1, 2, 3, 99)) yield
       (i * 10 + r, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         i, if (r == 99) "error" else "click", 1.0, s"""{"k": $r}""")

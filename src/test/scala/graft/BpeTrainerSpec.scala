@@ -200,8 +200,7 @@ class BpeTrainerSpec extends SparkSpec {
     assert(ru >= 2 * en,
       s"coverage gap must blow up fertility: ru=$ru bp vs en=$en bp")
     // and the registered query agrees end-to-end on a written corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft_fert")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_fert")
     docs.select(col("doc_id"), col("lang"), col("text"), lit("s").as("source"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Registry.byName("q235_tokenizer_fertility").fn(spark, dir)

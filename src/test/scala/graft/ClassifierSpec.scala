@@ -167,8 +167,7 @@ class ClassifierSpec extends SparkSpec {
       (10L, "xx yy xx xx", "B"), (12L, "yy yy xx", "B"),
       (1L, "aa bb aa", "A"), (3L, "bb aa", "A"),
       (11L, "xx xx yy", "B"), (13L, "yy xx", "B"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_nb")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_nb")
     rows.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Registry.byName("q199_naive_bayes_langid").fn(spark, dir)
@@ -213,8 +212,7 @@ class ClassifierSpec extends SparkSpec {
       (0 until 5).map(i => (i * 2 + 1L, a, "A")) ++ // held-out A
       (0 until 5).map(i => (101L + i * 2, b, "B")) ++ // held-out B
       Seq((201L, a, "B")) // PLANTED: A text, B label, held out
-    val dir = java.nio.file.Files.createTempDirectory("graft_cl")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_cl")
     rows.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val grid = Registry.byName("q248_label_noise").fn(spark, dir)
@@ -228,8 +226,7 @@ class ClassifierSpec extends SparkSpec {
   }
 
   test("q239 detects the planted code-switch that per-doc lang ID misses") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cswitch")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_cswitch")
     val en = "the of and to in is a the of and"   // 10 tokens, en stopwords
     val es = "el la de y en es un el la de"       // 10 tokens, es stopwords
     val rows = Seq(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.api.Compactor
 
@@ -30,7 +28,7 @@ class CompactorSpec extends SparkSpec {
   }
 
   test("compact shrinks a many-small-files table without losing a row") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = tempDir("graft-compact") + "/t"
     spark.range(0, 10000)
       .select(col("id"), (col("id") % 97).as("k"),
         sha2(col("id").cast("string"), 256).as("payload"))
@@ -62,7 +60,7 @@ class CompactorSpec extends SparkSpec {
 
   test("compact is a no-op on a missing or empty directory") {
     Compactor.compact(spark, "/tmp/graft-compact-definitely-missing", 1000L)
-    val empty = Files.createTempDirectory("graft-compact-empty").toString
+    val empty = tempDir("graft-compact-empty")
     Compactor.compact(spark, empty, 1000L) // no parquet files inside
   }
 }

@@ -221,8 +221,7 @@ class DedupQualitySpec extends SparkSpec {
     val p = (0 until 20).map(i => s"ph$i")
     val a = p ++ (0 until 5).map(i => s"ua$i")
     val b = p ++ p ++ p ++ p
-    val dir = java.nio.file.Files.createTempDirectory("graft_wjac")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_wjac")
     Seq((1L, a.mkString(" ")), (2L, b.mkString(" ")))
       .map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -314,8 +313,7 @@ class DedupQualitySpec extends SparkSpec {
     val small = (0 until 30).map(i => s"quoted$i")
     val extra = (0 until 200).map(i => s"body$i")
     val other = (0 until 40).map(i => s"other$i")
-    val dir = java.nio.file.Files.createTempDirectory("graft_contain")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_contain")
     Seq(
       (1L, small.mkString(" ")),
       (2L, (small ++ extra).mkString(" ")),
@@ -816,8 +814,7 @@ class DedupQualitySpec extends SparkSpec {
       (2L, s"${filler("b", 25)} $span ${filler("d", 35)}", "en", "src0", 0L),
       (3L, filler("e", 100), "en", "src0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_minz")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_minz")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Registry.byName("q161_minimizer_dedup").fn(spark, dir)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
@@ -945,8 +942,7 @@ class DedupQualitySpec extends SparkSpec {
     // doc 0-3 share one canonical form through case, punctuation and
     // whitespace noise (docs 2 and 3 are BYTE-equal, so they are one
     // raw variant, not two); doc 4 stands alone
-    val dir = java.nio.file.Files.createTempDirectory("graft_norm")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_norm")
     Seq(
       (0L, "Hello, World!  foo"),
       (1L, "hello world FOO"),

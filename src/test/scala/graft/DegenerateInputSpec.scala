@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
 class DegenerateInputSpec extends SparkSpec {
 
   private lazy val degenerateDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_degen")
     Tables.all.foreach { t =>
       val src = spark.read.parquet(s"$sfDir/$t.parquet")
       val out = t match {

@@ -374,8 +374,7 @@ class DiscoverySpec extends SparkSpec {
     // fitted exponent must read ~ -1 (the Zipf signature this
     // diagnostic exists to detect; the real synthetic corpus above is
     // near-uniform and reads ~ -0.18, which is the point)
-    val dir = java.nio.file.Files.createTempDirectory("graft_zipf")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_zipf")
     val text = (1 to 50).flatMap(r => Seq.fill(1000 / r)(s"zterm$r")).mkString(" ")
     Seq((1L, text, "en", "src0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -410,8 +409,7 @@ class DiscoverySpec extends SparkSpec {
     // false — the doc q73's top-gram mass also catches), an all-
     // distinct doc reads exactly 10000 bp, and a two-token 50/50 doc
     // reads H = ln 2 exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft_ent")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_ent")
     Seq(
       (1L, Seq.fill(64)("spam").mkString(" "), "en", "src0", 64L),
       (2L, (1 to 64).map(i => s"w$i").mkString(" "), "en", "src0", 64L),

@@ -10,8 +10,7 @@ package graft
 class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_empty")
     Tables.all.foreach { t =>
       val schema = spark.read.parquet(s"$sfDir/$t.parquet").schema
       spark.createDataFrame(

@@ -246,8 +246,7 @@ class HygieneSpec extends SparkSpec {
         phrase12 ++ phrase9 ++ filler("g", 5)),
       4L -> filler("h", 6),
       5L -> (filler("k", 14) ++ phrase9 ++ filler("m", 11)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_exsub")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_exsub")
     docsTok.map { case (id, w) =>
       (id, w.mkString(" "), "en", "src0", w.mkString(" ").length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -387,8 +386,7 @@ class HygieneSpec extends SparkSpec {
       2L -> (filler("t2", 6) ++ trainDup10 ++ filler("u2", 4)),
       3L -> (phrase9 ++ filler("t3", 15)), // overlap at doc start
       4L -> (filler("t4", 5) ++ trainDup10))
-    val dir = java.nio.file.Files.createTempDirectory("graft_xcontam")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_xcontam")
     docs.map { case (id, w) =>
       (id, w.mkString(" "), "en", "src0", w.mkString(" ").length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -555,8 +553,7 @@ class HygieneSpec extends SparkSpec {
     assert(ld64 == 64L && ld128 == 80L, s"$ld64 / $ld128")
     // and the session conf reaches the memoized corpus path: a
     // distinct cap is a distinct memo entry with the exact LCP
-    val dir = java.nio.file.Files.createTempDirectory("graft_maxsfx")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_maxsfx")
     tok.select(col("doc_id"), array_join(col("w"), " ").as("text"),
         lit("en").as("lang"), lit("src0").as("source"),
         length(array_join(col("w"), " ")).cast("long").as("n_chars"))
@@ -610,8 +607,7 @@ class HygieneSpec extends SparkSpec {
 
   test("q245 phrase matching never fires across a shuffled word bag (adjacency contract)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bl")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_bl")
     Seq(
       (1L, "please order fast now", "s1"), // phrase adjacent -> fires
       (2L, "order it fast there", "s1"), // words present, not adjacent
@@ -657,7 +653,7 @@ class HygieneSpec extends SparkSpec {
 
   test("q250 planted shared prefixes are counted at the right depths") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pfx").toString
+    val dir = tempDir("graft_pfx")
     val stem8 = (1 to 8).map(i => s"t$i").mkString(" ")
     Seq(
       (1L, stem8 + " alpha beta gamma", "en", "s", 1L),

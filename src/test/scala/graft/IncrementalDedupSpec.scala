@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.api.{ConnectedComponents, IncrementalDedup, Sharder}
 import graft.functions.TextFunctions
@@ -42,7 +40,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val batch = docs.filter(col("doc_id") % 10 === 0)
-    val dir = Files.createTempDirectory("dedup-ix").toString
+    val dir = tempDir("dedup-ix")
     IncrementalDedup.writeIndex(corpus, dir)
     val fromDisk = IncrementalDedup
       .newDupPairs(batch, IncrementalDedup.readIndex(spark, dir))
@@ -55,12 +53,40 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("index bands directory is partitioned by band (probe prunes partitions)") {
     val docs = Tables.documents(spark, sfDir).limit(50)
-    val dir = Files.createTempDirectory("dedup-ix-p").toString
+    val dir = tempDir("dedup-ix-p")
     IncrementalDedup.writeIndex(docs, dir)
     val sub = new java.io.File(s"$dir/bands").listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(sub.nonEmpty && sub.forall(_.startsWith("band=")),
       s"expected band=N partition dirs, got ${sub.toSeq}")
+  }
+
+  test("index build and each append add one data file per touched band") {
+    // no partition coalescing: every shuffle keeps 4 write tasks
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val docs = Tables.documents(spark, sfDir)
+      val dir = tempDir("dedup-files")
+      IncrementalDedup.writeIndex(docs.filter(col("doc_id") % 3 === 0), dir)
+      var before = dataFilesPerDir(s"$dir/bands")
+      assert(before.nonEmpty && before.values.forall(_ == 1),
+        s"build wrote $before")
+      for (r <- 1 to 2) {
+        IncrementalDedup.appendIndex(docs.filter(col("doc_id") % 3 === r), dir)
+        val touched = spark.read.parquet(s"$dir/bands")
+          .filter(col("doc_id") % 3 === r)
+          .select(col("band")).distinct().collect()
+          .map(b => s"band=${b.get(0)}").toSet
+        val now = dataFilesPerDir(s"$dir/bands")
+        assert(touched.size > 1, s"append $r touched $touched")
+        now.foreach { case (band, n) =>
+          val added = n - before.getOrElse(band, 0)
+          assert(added == (if (touched(band)) 1 else 0),
+            s"append $r added $added files to $band")
+        }
+        before = now
+      }
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
   }
 
   // ---- ConnectedComponents edge cases (round-4 advice) ----
@@ -125,7 +151,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .head().getString(0)
     val seedId = corpus.orderBy(col("doc_id")).select(col("doc_id"))
       .head().getLong(0)
-    val dir = Files.createTempDirectory("dedup-stream-ix").toString
+    val dir = tempDir("dedup-stream-ix")
     IncrementalDedup.writeIndex(corpus, dir)
 
     val input = org.apache.spark.sql.execution.streaming.runtime

@@ -15,8 +15,7 @@ class MapReduceApiSpec extends SparkSpec {
 
   test("wordCount over a text-file dir equals the registered wordcount query") {
     import spark.implicits._
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "mr-api").toString
+    val dir = tempDir("mr-api")
     Tables.documents(spark, sfDir).select($"doc_id", $"text").collect()
       .foreach { r =>
         Files.writeString(
@@ -30,29 +29,20 @@ class MapReduceApiSpec extends SparkSpec {
     assert(api.toSeq == query.toSeq)
   }
 
-  test("default simple fold folds İ 1:1 (towlower/utf8proc); spark.graft.fold=full opts into the JVM mapping") {
+  test("wordcount folds İ 1:1 (towlower/utf8proc)") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "fold").toString
+    val tmp = tempDir("fold")
     Tables.documents(spark, sfDir).limit(1)
       .withColumn("text", lit("İstanbul Merhaba"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     def words(): Set[String] =
       Registry.byName("wordcount").fn(spark, tmp)
         .collect().map(_.getString(0)).toSet
-    // simple (default since round 17): İ→i (one codepoint), the token
-    // survives intact — the reference's towlower and DuckDB's
-    // utf8proc behavior, so default output oracle-matches everywhere
+    // simple fold: İ→i (one codepoint), the token survives intact —
+    // the reference's towlower and DuckDB's utf8proc behavior, so the
+    // output oracle-matches everywhere
     val simple = words()
     assert(simple == Set("istanbul", "merhaba"), s"simple fold: $simple")
-    // full (opt-in): JVM İ→"i"+U+0307; the combining mark is not
-    // \p{L}\p{N}, so the token SPLITS — the observable divergence
-    spark.conf.set(graft.functions.TextFunctions.FoldConf, "full")
-    try {
-      val full = words()
-      assert(full == Set("i", "stanbul", "merhaba"), s"full fold: $full")
-    } finally spark.conf.unset(graft.functions.TextFunctions.FoldConf)
-    assert(words() == simple, "unset conf must restore simple folding")
   }
 
   test("generic run() supports arbitrary key/value types and reduce fns") {

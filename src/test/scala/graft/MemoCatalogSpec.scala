@@ -16,7 +16,7 @@ class MemoCatalogSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_memo").toString
+    tempDir("graft_memo")
 
   private def withMemoDir[T](root: String)(f: => T): T = {
     spark.conf.set(MemoCatalog.DirConf, root)
@@ -236,7 +236,7 @@ class MemoCatalogSpec extends SparkSpec {
     assert(MemoCatalog.fingerprint(base.repartition(7)) == fp,
       "partitioning changed the fingerprint")
     // a rewrite through parquet (fresh layout, fresh file order) matches
-    val tmp = Files.createTempDirectory("graft_fp").toString
+    val tmp = tempDir("graft_fp")
     base.repartition(3).write.mode("overwrite").parquet(tmp)
     assert(MemoCatalog.fingerprint(
       spark.read.parquet(tmp).select(col("id"), col("txt"))) == fp,
@@ -360,7 +360,7 @@ class MemoCatalogSpec extends SparkSpec {
     // a MUTATED copy of the corpus must flip the fingerprint and
     // rebuild, and the served relation must reflect the new data
     val root = freshRoot()
-    val snap = Files.createTempDirectory("graft_snap").toString
+    val snap = tempDir("graft_snap")
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
@@ -495,7 +495,7 @@ class MemoCatalogSpec extends SparkSpec {
       "java.base/sun.security.action", "java.base/sun.util.calendar",
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     def launch(tag: String): (Process, java.io.File) = {
-      val log = java.io.File.createTempFile(s"racer-$tag", ".log")
+      val log = new java.io.File(tempDir(s"racer-$tag"), "racer.log")
       val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
         "-Xmx1g", "-Dspark.ui.enabled=false",
         "-Dspark.sql.session.timeZone=UTC", "-cp", cp,

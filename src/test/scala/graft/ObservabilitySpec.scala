@@ -40,8 +40,7 @@ class ObservabilitySpec extends SparkSpec {
   test("foreachBatch + dynamic overwrite upserts only touched partitions per batch") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_upsert")
-      .toFile.getAbsolutePath
+    val path = tempDir("graft_upsert")
     val orig = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {

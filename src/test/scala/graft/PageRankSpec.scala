@@ -103,8 +103,7 @@ class PageRankSpec extends SparkSpec {
       o <- Seq(oBase, oBase + 1)
       p <- parts
     } yield (o, p)
-    val dir = java.nio.file.Files.createTempDirectory("graft_lpa")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_lpa")
     rows.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val got = Registry.byName("q192_label_propagation").fn(spark, dir)
@@ -160,8 +159,7 @@ class PageRankSpec extends SparkSpec {
       (for (o <- Seq(100L, 101L); p <- Seq(1L, 2L, 3L, 4L)) yield (o, p)) ++
       (for (o <- Seq(200L, 201L); p <- Seq(4L, 5L)) yield (o, p)) ++
       (for (o <- Seq(300L, 301L); p <- Seq(5L, 6L)) yield (o, p))
-    val dir = java.nio.file.Files.createTempDirectory("graft_kcore")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_kcore")
     rows.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val got = Registry.byName("q198_kcore_onion").fn(spark, dir)

@@ -164,7 +164,7 @@ class SamplingSpec extends SparkSpec {
     // the chunked max must equal the flat max over j = 1..w for all
     import spark.implicits._
     val weights = Seq(1L, 7L, 4095L, 4096L, 4097L, 12345L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q232_long").toString
+    val dir = tempDir("graft_q232_long")
     weights.zipWithIndex.map { case (w, i) =>
       (i + 1L, Seq.fill(w.toInt)("tok").mkString(" "), "en", "fixture", 3L * w)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -189,7 +189,7 @@ class SamplingSpec extends SparkSpec {
       val t = words.take(13 - i).mkString(" ")
       (i.toLong, t, "en", "s", t.length.toLong)
     }
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_rbo1").toString
+    val dir1 = tempDir("graft_rbo1")
     same.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir1/documents.parquet")
     val r1 = Registry.byName("q249_rank_agreement").fn(spark, dir1)
@@ -204,7 +204,7 @@ class SamplingSpec extends SparkSpec {
         (low.length + i).toLong)) ++
       (13 to 24).map(i => (i.toLong, words.take(5).mkString(" ") + " z" + i,
         "en", "s", 25L))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_rbo2").toString
+    val dir2 = tempDir("graft_rbo2")
     disj.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
     val r2 = Registry.byName("q249_rank_agreement").fn(spark, dir2)

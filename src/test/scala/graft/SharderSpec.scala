@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.api.Sharder
 
@@ -14,7 +12,7 @@ class SharderSpec extends SparkSpec {
   private val nShards = 16
 
   test("sharder writes one file per shard, conserves rows, prunes on read") {
-    val dir = Files.createTempDirectory("graft_shards").toString
+    val dir = tempDir("graft_shards")
     val docs = Tables.documents(spark, sfDir)
     Sharder.write(docs, "doc_id", nShards, dir)
 

@@ -8,17 +8,12 @@ import org.apache.spark.sql.functions._
   * text, wholetext dir scan with input_file_name (the reference's
   * native input mode, mapper.c:44-66/95-117), csv and json round
   * trips, and the binaryFile source for multimodal blobs. Files are
-  * written under target/ (inside the repo) and compared back against
-  * the parquet-derived truth.
+  * written under the suite's temporary directory and compared back
+  * against the parquet-derived truth.
   */
 class SourcesSpec extends SparkSpec {
 
-  private lazy val tmpRoot = {
-    val p = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sources-spec")
-    p.toFile.deleteOnExit()
-    p.toString
-  }
+  private lazy val tmpRoot = tempDir("sources-spec")
 
   test("wholetext dir scan + tokenize reproduces the documents word count (R1/R2 parity)") {
     import spark.implicits._
@@ -155,8 +150,7 @@ class SourcesSpec extends SparkSpec {
     import spark.implicits._
     // a 100 TB ingest always contains garbage lines — the three mode
     // contracts are what keep a corrupt shard from poisoning the job
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjson")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_badjson")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/data.json"),
       """{"id": 1, "v": 10.0}
@@ -187,8 +181,7 @@ class SourcesSpec extends SparkSpec {
 
   test("gzip text input decompresses transparently") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gz")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_gz")
     val out = new java.util.zip.GZIPOutputStream(
       new java.io.FileOutputStream(s"$dir/part.txt.gz"))
     out.write("alpha\nbeta\ngamma\n".getBytes("UTF-8"))
@@ -251,7 +244,7 @@ class SourcesSpec extends SparkSpec {
 
   test("parquet schema evolution: mergeSchema unions columns across file generations") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val dir = tempDir("graft-evolve")
     // generation 1: (id, a); generation 2 adds a column (id, a, b) — the
     // shape a long-lived 100 TB corpus takes as pipelines add fields
     Seq((1L, "x"), (2L, "y")).toDF("id", "a")

@@ -13,6 +13,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** This suite's temporary root, made on first use; `afterAll`
+    * deletes it with everything under it.
+    */
+  private var tempRoot: Option[java.nio.file.Path] = None
+
+  /** A fresh directory under this suite's temporary root. */
+  protected def tempDir(prefix: String): String = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory(
+        s"graft-${getClass.getSimpleName}-")
+      tempRoot = Some(r)
+      r
+    }
+    java.nio.file.Files.createTempDirectory(root, prefix).toString
+  }
+
+  /** Data files (no `.crc`, no `_SUCCESS`) per partition directory
+    * (`c_id=3`, `band=0`, ...) under `root`.
+    */
+  protected def dataFilesPerDir(root: String): Map[String, Int] =
+    new java.io.File(root).listFiles().filter(_.isDirectory).map { p =>
+      p.getName -> p.listFiles().count(f =>
+        f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    }.toMap
+
   /** Spark jobs started while `body` runs. */
   protected def jobsDuring(body: => Unit): Long = {
     val n = new java.util.concurrent.atomic.AtomicLong(0)
@@ -51,6 +76,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // release query-scoped persisted inputs (dedup shingle postings)
     // between suites — the session is shared across all of them
     spark.sharedState.cacheManager.clearCache()
+    synchronized {
+      tempRoot.foreach(r => org.apache.commons.io.FileUtils.deleteDirectory(r.toFile))
+      tempRoot = None
+    }
     super.afterAll()
   }
 }

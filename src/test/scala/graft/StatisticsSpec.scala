@@ -394,8 +394,7 @@ class StatisticsSpec extends SparkSpec {
         base + ((day * 24L + h) * 3600L + j) * 1000L)
       ((day * 24L + h) * 100L + j, ts, j.toLong, "view", 1.0, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_hourly")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_hourly")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -828,8 +827,7 @@ class StatisticsSpec extends SparkSpec {
       val dollars = if (i == 21) 1.0e6 else i.toDouble
       (i.toLong, java.sql.Timestamp.valueOf(f"${1995 + (i - 1) / 12}%04d-${(i - 1) % 12 + 1}%02d-01 00:00:00"), dollars)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_ts")
     rows.toDF("o_orderkey", "o_orderdate", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val got = Registry.byName("q201_theil_sen").fn(spark, dir)
@@ -1007,8 +1005,7 @@ class StatisticsSpec extends SparkSpec {
       assert(got((a, b)) == jsd(counts(a), counts(b)), s"pair ($a,$b)")
 
     // poles: identical distributions -> 0; disjoint vocabularies -> ~ln 2
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsd")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_jsd")
     import spark.implicits._
     Seq((1L, "a b c a", "s1"), (2L, "a b c a", "s2"),
       (3L, "x y z x y z", "s3"))
@@ -1098,8 +1095,7 @@ class StatisticsSpec extends SparkSpec {
         // (the zero-variance guard would otherwise NULL the z)
         (if (i % 2 == 0) 50.0 else 1.0) + (i % 5) * 0.1, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_bh")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_bh")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = Registry.byName("q251_fdr_control").fn(spark, dir).collect()

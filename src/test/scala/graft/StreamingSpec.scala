@@ -396,8 +396,7 @@ class StreamingSpec extends SparkSpec {
     // sink with a checkpoint must survive kill/restart without
     // duplicating or dropping rows (file-source offsets + sink
     // _spark_metadata commit log together give exactly-once)
-    val root = java.nio.file.Files.createTempDirectory("graft_ckpt")
-      .toFile.getAbsolutePath
+    val root = tempDir("graft_ckpt")
     val srcDir = s"$root/src"; val outDir = s"$root/out"
     val ckptDir = s"$root/ckpt"
     val schema = org.apache.spark.sql.Encoders.product[Event].schema
@@ -436,8 +435,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_ckpt")
-        .toFile.getAbsolutePath
+      val ckpt = tempDir("graft_tws_ckpt")
       val input = MemoryStream[Event]
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double)]()
       def start() = StreamingOps.runningTotals(spark, input.toDS())
@@ -483,8 +481,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_gk_ckpt")
-        .toFile.getAbsolutePath
+      val ckpt = tempDir("graft_gk_ckpt")
       val input = MemoryStream[Event]
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Double)]()
       def start() = StreamingOps.quantileMonitor(spark, input.toDS(), eps = 0.05)
@@ -532,8 +529,7 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
     try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_evo_ckpt")
-        .toFile.getAbsolutePath
+      val ckpt = tempDir("graft_evo_ckpt")
       val input = MemoryStream[Event]
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Double)]()
 
@@ -636,8 +632,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_evo_ur_ckpt")
-        .toFile.getAbsolutePath
+      val ckpt = tempDir("graft_evo_ur_ckpt")
       val input = MemoryStream[Event]
       val q1 = StreamingOps.runningTotals(spark, input.toDS())
         .writeStream
@@ -714,8 +709,7 @@ class StreamingSpec extends SparkSpec {
       def run(batches: Seq[Seq[Event]]): Map[String, (Long, Int)] = {
         val input = MemoryStream[Event]
         val out = scala.collection.mutable.Map.empty[String, (Long, Int)]
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_hll").toFile.getAbsolutePath
+        val ckpt = tempDir("graft_hll")
         val q = StreamingOps.distinctMonitor(spark, input.toDS())
           .toDF("event_type", "approx_users", "m")
           .writeStream
@@ -754,8 +748,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_hll_ck")
-        .toFile.getAbsolutePath
+      val ckpt = tempDir("graft_hll_ck")
       val input = MemoryStream[Event]
       val out = scala.collection.mutable.ArrayBuffer.empty[Long]
       def start() = StreamingOps.distinctMonitor(spark, input.toDS())
@@ -953,8 +946,7 @@ class StreamingSpec extends SparkSpec {
   test("stream-stream LEFT OUTER join survives checkpoint kill/restart without re-emitting") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sslo_ckpt")
-      .toFile.getAbsolutePath
+    val ckpt = tempDir("graft_sslo_ckpt")
     val input = MemoryStream[Event]
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Boolean)]()
     def start() = StreamingOps.viewConversions(input.toDF(),
@@ -1025,9 +1017,9 @@ class StreamingSpec extends SparkSpec {
     // exactly-once bookkeeping (vs processAllAvailable, which needs a
     // manual stop and a long-lived query)
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("avnow_src").toFile.getAbsolutePath
-    val ckpt = java.nio.file.Files.createTempDirectory("avnow_ck").toFile.getAbsolutePath
-    val out = java.nio.file.Files.createTempDirectory("avnow_out").toFile.getAbsolutePath
+    val src = tempDir("avnow_src")
+    val ckpt = tempDir("avnow_ck")
+    val out = tempDir("avnow_out")
     def catchUp(): Unit = {
       val q = spark.readStream.schema("v LONG").parquet(src)
         .writeStream.format("parquet")

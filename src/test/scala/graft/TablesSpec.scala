@@ -10,7 +10,7 @@ class TablesSpec extends SparkSpec {
   import spark.implicits._
 
   test("a rewritten table is read fresh in the same session; an unchanged one is reused") {
-    val dir = Files.createTempDirectory("tables-spec").toString
+    val dir = tempDir("tables-spec")
     Seq(1L, 2L).toDF("x").write.parquet(s"$dir/t.parquet")
     val first = Tables.load(spark, dir, "t")
     assert(first.count() == 2)
@@ -24,9 +24,9 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a symlink cycle under a table directory is not descended") {
-    val dir = Files.createTempDirectory("tables-spec")
+    val dir = tempDir("tables-spec")
     Seq(1L).toDF("x").write.parquet(s"$dir/t.parquet")
-    val table = dir.resolve("t.parquet")
+    val table = java.nio.file.Paths.get(dir, "t.parquet")
     // two links back to the table: descending them would walk 2^depth
     // paths; the leading `_` keeps Spark's own listing off them
     Files.createSymbolicLink(table.resolve("_loop_a"), table)
@@ -34,6 +34,6 @@ class TablesSpec extends SparkSpec {
     val fp = Tables.fingerprint(table.toString)
     assert(fp.isDefined)
     assert(Tables.fingerprint(table.toString) == fp, "fingerprint must be stable")
-    assert(Tables.load(spark, dir.toString, "t").count() == 1)
+    assert(Tables.load(spark, dir, "t").count() == 1)
   }
 }

@@ -81,19 +81,11 @@ class VectorSearchSpec extends SparkSpec {
     }
   }
 
-  /** Runs `body` on a fresh temporary directory, deleted afterwards. */
-  private def withTempDir[T](prefix: String)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try body(dir.getAbsolutePath)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
-
   test("q200 runs in at most 10 Spark jobs, full output written") {
-    val jobs = withTempDir("graft_q200_jobs") { out =>
-      jobsDuring {
-        Registry.byName("q200_mmr_diversified").fn(spark, sfDir)
-          .write.parquet(s"$out/out")
-      }
+    val out = tempDir("graft_q200_jobs")
+    val jobs = jobsDuring {
+      Registry.byName("q200_mmr_diversified").fn(spark, sfDir)
+        .write.parquet(s"$out/out")
     }
     assert(jobs <= 10, s"q200 ran $jobs jobs")
   }
@@ -102,7 +94,8 @@ class VectorSearchSpec extends SparkSpec {
     * embeddings table, vec_id 0, 1, ...
     */
   private def withEmbeddings[T](prefix: String, vecs: Seq[Array[Float]])(
-      body: String => T): T = withTempDir(prefix) { dir =>
+      body: String => T): T = {
+    val dir = tempDir(prefix)
     spark.createDataFrame(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) })
       .toDF("vec_id", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
@@ -311,8 +304,7 @@ class VectorSearchSpec extends SparkSpec {
   }
 
   test("q236 mines exactly the planted parallel pairs, mutual-best, margin above the bar") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bitext")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_bitext")
     // three planted cross-side parallel pairs on near-identical
     // directions, plus one decoy per side pointing elsewhere; a
     // shared positive base keeps all sims positive so neighborhoods
@@ -348,8 +340,7 @@ class VectorSearchSpec extends SparkSpec {
   }
 
   test("q236 margin normalizes hubness away: the pair raw cosine gets wrong is re-routed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hub")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_hub")
     // side 0: a HUB h near everything (the degenerate direction real
     // embedding spaces grow) and a specific source s1; side 1: t_a is
     // RAW-COSINE-closer to the hub than to its true partner s1, and
@@ -383,6 +374,17 @@ class VectorSearchSpec extends SparkSpec {
         s"the raw-cosine hub match must NOT be mined, got $mined")
     } finally spark.conf.unset("spark.graft.isolation.k")
     spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("isolation.k = 0 fails q191, q203, q228 and q236 with the range message") {
+    spark.conf.set("spark.graft.isolation.k", "0")
+    try Seq("q191_isolation_audit", "q203_mutual_knn", "q228_hard_negatives",
+        "q236_bitext_mining").foreach { n =>
+      val e = intercept[IllegalArgumentException](
+        Registry.byName(n).fn(spark, sfDir))
+      assert(e.getMessage.contains("invalid spark.graft.isolation.k=0"),
+        s"$n: ${e.getMessage}")
+    } finally spark.conf.unset("spark.graft.isolation.k")
   }
 
   test("q236 pairs are mutual best matches under a driver-side recompute") {

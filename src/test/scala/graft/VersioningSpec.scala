@@ -158,8 +158,7 @@ class VersioningSpec extends SparkSpec {
     // layout invariance: the same corpus re-sharded must fingerprint
     // identically (the property an ordered digest lacks)
     val docs = Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_fp")
     docs.orderBy(col("text")).repartition(13)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val reshard = Registry.byName("q196_dataset_fingerprint").fn(spark, dir)
@@ -169,8 +168,7 @@ class VersioningSpec extends SparkSpec {
 
     // sensitivity: flipping one document's text flips the fingerprint
     // of exactly its source (and the total)
-    val mutDir = java.nio.file.Files.createTempDirectory("graft_fp2")
-      .toFile.getAbsolutePath
+    val mutDir = tempDir("graft_fp2")
     val mutatedSource = docs.orderBy(col("doc_id")).limit(1)
       .select(col("source")).head.getString(0)
     docs.withColumn("text",

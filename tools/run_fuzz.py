@@ -53,11 +53,10 @@ DOCUMENTED = {
     "nulls": {},
     "empty": {},
     # Round-17 closure: the last class-D cell (wordcount İ) is CLOSED
-    # engine-side — the default fold is now the locale-independent
-    # SIMPLE 1:1 mapping (İ→i, what towlower and DuckDB's utf8proc
-    # apply), so default output hash-matches the oracle on the
-    # unicode corpus; `spark.graft.fold=full` remains the opt-in JVM
-    # full-casing mode (MapReduceApiSpec pins both).
+    # engine-side — the fold is the locale-independent SIMPLE 1:1
+    # mapping (İ→i, what towlower and DuckDB's utf8proc apply), so the
+    # output hash-matches the oracle on the unicode corpus
+    # (MapReduceApiSpec pins it).
     "unicode": {},
     "skew": {},
 }
