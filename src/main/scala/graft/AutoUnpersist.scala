@@ -57,7 +57,7 @@ object AutoUnpersist {
       private def maybeRelease(qe: QueryExecution): Unit = {
         val uses =
           try qe.analyzed.exists(_.sameResult(target))
-          catch { case _: Throwable => false }
+          catch { case scala.util.control.NonFatal(_) => false }
         if (uses && released.compareAndSet(false, true)) {
           cached.unpersist(blocking = false)
           spark.listenerManager.unregister(L)

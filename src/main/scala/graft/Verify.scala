@@ -22,7 +22,8 @@ object Verify {
 
   /** The dump itself, session-agnostic (tests drive it with the shared
     * session; `main` owns session lifecycle). Returns the message of
-    * each query that failed, by name.
+    * each query that failed, by name; a query whose cached relations
+    * are still cached 10 s after its write counts as failed.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       only: Option[Set[String]] = None): Map[String, String] = {
@@ -31,15 +32,21 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        // a query must release what it cached once its action is done
+        // (`AutoUnpersist`); the release is asynchronous, so poll
+        if (!cacheReleased(spark, 10000)) {
+          System.err.println(s"[verify] $name failed: $Leaked")
+          failed += name -> Leaked
+        }
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name -> String.valueOf(e.getMessage)
       }
-      // release query-scoped persisted inputs (dedup shingle postings):
-      // one shared session runs all 59 queries, so per-query caches
-      // must not accumulate for the session lifetime
+      // one shared session runs every query: drop what a failed or
+      // leaking query left cached, so the next query starts empty
       spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -59,5 +66,14 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     failed.result()
+  }
+
+  private val Leaked = "left cached relations after its action"
+
+  private def cacheReleased(spark: SparkSession, maxMs: Long): Boolean = {
+    val deadline = System.currentTimeMillis() + maxMs
+    while (!spark.sharedState.cacheManager.isEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+    spark.sharedState.cacheManager.isEmpty
   }
 }

@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing — the last step of a pretraining data pipeline:
@@ -15,14 +14,26 @@ import org.apache.spark.sql.functions._
   *
   * The global running token total is the crux at scale: a bare
   * `sum(...) OVER (ORDER BY ...)` funnels the corpus through ONE
-  * reducer task. This computes it in two passes instead (the q15
-  * ranking idiom): range-repartition on the order key, cumsum within
-  * each partition on all K tasks, then add per-partition prefix
-  * offsets — K rows of driver metadata, the same order of state the
-  * range sampler itself keeps. Every heavy op stays partitioned at
-  * any corpus size.
+  * reducer task. It comes from [[Ranking.withRunningTotal]] instead —
+  * range repartition, per-partition token sums turned into offsets
+  * as metadata, a within-partition cumsum on all K tasks — so every
+  * heavy op stays partitioned at any corpus size.
   */
 object SequencePacker {
+
+  /** Column names `pack` introduces (and `grp_n`, which it also
+    * drops): inputs carrying any of these would be silently clobbered,
+    * so they are rejected up front — same contract as
+    * `Sharder.withShard`.
+    */
+  private val packReserved = Seq("cum", "grp_n", "seq_id", "end_seq", "seq_offset")
+  private val sliceReserved = Seq("seq", "glo_start", "glo_end", "tok_start", "seq_off", "slice_len")
+
+  private def requireFree(df: DataFrame, names: Seq[String], op: String): Unit = {
+    val clash = names.filter(df.columns.contains)
+    require(clash.isEmpty,
+      s"$op would overwrite input column(s) ${clash.mkString(", ")} — rename them first")
+  }
 
   /** Placement of each row's `nCol` tokens in B-token sequences,
     * ordered by `orderCol` (a unique key). Adds:
@@ -33,49 +44,20 @@ object SequencePacker {
     * Rows with zero/negative token counts must be filtered out by
     * the caller (they occupy no tokens, so they have no placement).
     *
-    * The returned plan reads the persisted range-partitioned input;
-    * the persist guarantees the count pass and the cumsum pass see
-    * identical range boundaries (same contract as q15 — harnesses
-    * and tests clear the cache manager per query).
+    * One lazy plan: the range-partitioned input it caches is released
+    * when the first action on the result completes.
     */
-  /** Column names `pack` introduces (and `pid`/`off`, which it also
-    * drops): inputs carrying any of these would be silently clobbered,
-    * so they are rejected up front — same contract as
-    * `Sharder.withShard`.
-    */
-  private val packReserved = Seq("pid", "off", "cum", "seq_id", "end_seq", "seq_offset")
-  private val sliceReserved = Seq("seq", "glo_start", "glo_end", "tok_start", "seq_off", "slice_len")
-
-  private def requireFree(df: DataFrame, names: Seq[String], op: String): Unit = {
-    val clash = names.filter(df.columns.contains)
-    require(clash.isEmpty,
-      s"$op would overwrite input column(s) ${clash.mkString(", ")} — rename them first")
-  }
-
   def pack(rows: DataFrame, orderCol: String, nCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     requireFree(rows, packReserved, "SequencePacker.pack")
-    val spark = rows.sparkSession
-    val parts = rows
-      .repartitionByRange(col(orderCol))
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    val totals = parts.groupBy(col("pid"))
-      .agg(sum(col(nCol)).as("t")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = totals.map(_._1)
-      .zip(totals.map(_._2).scanLeft(0L)(_ + _).dropRight(1)).toSeq
-    val offDf = spark.createDataFrame(offsets).toDF("pid", "off")
-    val w = Window.partitionBy(col("pid")).orderBy(col(orderCol))
     // `div` keeps the arithmetic in LongType end to end — a double
     // division would lose token positions past 2^53 on a big corpus
-    parts.join(broadcast(offDf), "pid")
-      .withColumn("cum", sum(col(nCol)).over(w) + col("off"))
+    Ranking.withRunningTotal(rows, Nil, Seq(col(orderCol)), nCol, "cum")
+      .drop("grp_n")
       .withColumn("seq_id", expr(s"(cum - $nCol) div $budget"))
       .withColumn("end_seq", expr(s"(cum - 1) div $budget"))
       .withColumn("seq_offset", expr(s"(cum - $nCol) % $budget"))
-      .drop("pid", "off")
   }
 
   /** Loader-side materialization of `pack`'s placement: one row per

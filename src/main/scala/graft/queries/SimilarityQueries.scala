@@ -1404,12 +1404,8 @@ object SimilarityQueries {
     val t = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val qs = t.filter(col("vec_id") >= 20 && col("vec_id") < 30)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val exact = t.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cs", GraftFunctions.cosineSim(col("qe"), col("embedding")))
-      .groupBy(col("q_id"))
-      .agg(GraftFunctions.topkByScore(col("cs"), col("vec_id"), 10).as("top"))
-      .select(col("q_id"), explode(col("top.id")).as("n_id"))
+    val exact = rerankTopk(t.crossJoin(broadcast(qs)), "qe", "embedding", 10)
+      .select(col("q_id"), col("n_id"))
     val approx = q39AnnIvf.fn(s, d).select(col("q_id"), col("n_id"))
     exact.join(approx.withColumn("hit", lit(1)), Seq("q_id", "n_id"), "left_outer")
       .groupBy(col("q_id"))

@@ -108,15 +108,12 @@ object WindowQueries {
   /** ntile + percent_rank (exact rational arithmetic → deterministic
     * doubles in both engines), computed SCALE-SAFE: a bare
     * `Window.orderBy(...)` funnels the whole table through ONE
-    * reducer task, so instead the global rank is built in two
-    * passes — range-repartition on the sort key, then
-    * rank = within-partition row_number + partition row-count offset.
-    * The per-partition counts are K rows of driver-side metadata
-    * (K = shuffle partitions), the same order of boundary state the
-    * range sampler itself collects; every heavy operation (sort,
-    * window, join) stays partitioned on all K tasks at any scale.
-    * PropertySpec pins this plan equal to the built-in single-window
-    * form.
+    * reducer task, so the global rank and row count come from
+    * [[graft.api.Ranking.withRank]] (range repartition, per-partition
+    * counts turned into offsets as metadata, within-partition
+    * row numbers on all K tasks), and the quartile and percent rank
+    * are per-row arithmetic on `rn` and `grp_n`. PropertySpec pins
+    * this plan equal to the built-in single-window form.
     */
   val q15Ntile = QueryDef(
     "q15_ntile",
@@ -127,34 +124,20 @@ object WindowQueries {
       |FROM customer
       |ORDER BY c_custkey""".stripMargin) { (s, d) =>
     val n = 4
-    // persisted so the range boundaries seen by the count pass and
-    // the ranking pass are identical; harnesses clear cache per query
-    val parts = Tables.customer(s, d)
-      .select(col("c_custkey"), col("c_acctbal"))
-      .repartitionByRange(col("c_acctbal"), col("c_custkey"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    val counts = parts.groupBy(col("pid")).count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val total = counts.map(_._2).sum
-    val offsets = counts.map(_._1)
-      .zip(counts.map(_._2).scanLeft(0L)(_ + _).dropRight(1)).toSeq
-    val offDf = s.createDataFrame(offsets).toDF("pid", "off")
-    val w = Window.partitionBy(col("pid"))
-      .orderBy(col("c_acctbal"), col("c_custkey"))
-    // ntile semantics: the first (total % n) tiles get one extra row
-    val q = total / n
-    val r = total % n
-    parts.join(broadcast(offDf), "pid")
-      .withColumn("rn", row_number().over(w).cast("long") + col("off"))
-      .withColumn("quartile",
-        if (q == 0) col("rn").cast("int") // fewer rows than tiles
-        else when(col("rn") <= lit(r * (q + 1)),
-          expr(s"CAST((rn - 1) DIV ${q + 1} AS INT) + 1"))
-          .otherwise(expr(s"CAST($r + (rn - ${r * (q + 1)} - 1) DIV $q AS INT) + 1")))
+    graft.api.Ranking.withRank(
+        Tables.customer(s, d).select(col("c_custkey"), col("c_acctbal")),
+        Nil, Seq(col("c_acctbal"), col("c_custkey")))
+      // ntile semantics: with q = grp_n div n and r = grp_n % n, the
+      // first r tiles get q + 1 rows and the rest q (when q = 0 every
+      // rn <= r, so the second branch never divides by zero)
+      .withColumn("q", expr(s"grp_n div $n"))
+      .withColumn("r", expr(s"grp_n % $n"))
+      .withColumn("quartile", expr(
+        """CASE WHEN rn <= r * (q + 1) THEN CAST((rn - 1) DIV (q + 1) AS INT) + 1
+          |ELSE CAST(r + (rn - r * (q + 1) - 1) DIV q AS INT) + 1 END""".stripMargin))
       .withColumn("pr",
-        if (total <= 1) lit(0.0)
-        else (col("rn") - 1).cast("double") / lit((total - 1).toDouble))
+        when(col("grp_n") <= 1, lit(0.0))
+          .otherwise((col("rn") - 1).cast("double") / (col("grp_n") - 1).cast("double")))
       .select(col("c_custkey"), col("quartile"), col("pr"))
       .orderBy(col("c_custkey"))
   }

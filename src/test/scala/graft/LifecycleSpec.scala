@@ -34,6 +34,15 @@ class LifecycleSpec extends SparkSpec {
       "q36 left cached blocks behind after its action completed")
   }
 
+  test("SequencePacker.pack (and so Compactor.plan) releases its input after the action") {
+    import spark.implicits._
+    spark.sharedState.cacheManager.clearCache()
+    val rows = (1 to 200).map(i => (i.toLong, (i % 13 + 1).toLong)).toDF("id", "n")
+    assert(api.SequencePacker.pack(rows, "id", "n", 64L).count() == 200)
+    assert(awaitEmptyCache(10000),
+      "pack left cached blocks behind after its action completed")
+  }
+
   test("AutoUnpersist ignores unrelated concurrent executions") {
     spark.sharedState.cacheManager.clearCache()
     val cached = AutoUnpersist.scoped(

@@ -101,6 +101,34 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  test("Ranking.withRunningTotal equals the built-in running sum, grouped and global") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // NULL group keys, zero and negative weights (q164 feeds -1 deltas)
+    val rowGen: Gen[List[(Option[String], Long, Long)]] =
+      Gen.listOfN(60, Gen.zip(Gen.option(Gen.oneOf("a", "b", "c")),
+        Gen.choose(-20L, 20L), Gen.choose(-5L, 5L)))
+    val old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try check(Prop.forAll(rowGen) { xs =>
+      val df = xs.zipWithIndex.map { case ((k, v, w), i) => (k.orNull, v, i.toLong, w) }
+        .toDF("k", "v", "id", "w")
+      val ok = Seq(Seq("k"), Nil).forall { groupCols =>
+        val got = api.Ranking.withRunningTotal(df, groupCols,
+            Seq(col("v"), col("id")), "w")
+          .select(col("id"), col("cum"), col("grp_n"))
+        val g = Window.partitionBy(groupCols.map(col): _*)
+        val want = df.select(col("id"),
+          sum(col("w")).over(g.orderBy(col("v"), col("id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"),
+          sum(col("w")).over(g).as("grp_n"))
+        got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty
+      }
+      spark.sharedState.cacheManager.clearCache()
+      ok
+    }) finally spark.conf.set("spark.sql.shuffle.partitions", old)
+  }
+
   test("Neighbors.withNeighbors equals the built-in global lag/lead on random data") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
