@@ -41,16 +41,6 @@ object TextFunctions {
   def tokenCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => length(t) > lit(0)))
 
-  /** Character n-grams of a string as an array column (for shingling /
-    * near-dup detection). Pure higher-order-function implementation —
-    * `sequence` + `transform` + `substring` — fully codegen-friendly.
-    */
-  def charNgrams(text: Column, n: Int): Column = {
-    val len = length(text)
-    when(len < n, array().cast("array<string>")).otherwise(
-      transform(sequence(lit(1), len - n + 1), i => text.substr(i, lit(n))))
-  }
-
   /** Word n-grams from a token-array column: join each sliding window
     * of `n` tokens with a single space.
     */

@@ -127,6 +127,16 @@ object GraftFunctions {
       new ExpressionInfo(classOf[PortableHash64].getName, "portable_hash64"),
       (children: Seq[Expression]) => PortableHash64(children.head))
 
+  val polyHashDescriptor: Descriptor =
+    (FunctionIdentifier("poly_hash"),
+      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
+      (children: Seq[Expression]) => PolyHash(children.head))
+
+  val minGramHashDescriptor: Descriptor =
+    (FunctionIdentifier("min_gram_hash"),
+      new ExpressionInfo(classOf[MinGramHash].getName, "min_gram_hash"),
+      (children: Seq[Expression]) => MinGramHash(children.head))
+
   val vecDotDescriptor: Descriptor =
     (FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
@@ -153,6 +163,7 @@ object GraftFunctions {
       unicodeNormalizeDescriptor, quantizeI8Descriptor, vectorSumDescriptor,
       fuzzyMatchDescriptor, freqTopkDescriptor, gramSumsDescriptor,
       mix64Descriptor, portableHash64Descriptor,
+      polyHashDescriptor, minGramHashDescriptor,
       vecDotDescriptor, vecDistSqDescriptor,
       vecQMilliDescriptor, lcpTokensDescriptor)
 
@@ -238,6 +249,16 @@ object GraftFunctions {
     * fold + mix64 — DuckDB-reproducible, see PortableHash64).
     */
   def portableHash64(s: Column): Column = call_function("portable_hash64", s)
+
+  /** Column-API form of the native Karp–Rabin fold
+    * `(acc*31 + cp) % 1000000007` over code points (see [[PolyHash]]).
+    */
+  def polyHash(s: Column): Column = call_function("poly_hash", s)
+
+  /** Column-API form of the native minimum rolling hash over the
+    * 8-grams of code points, NULL below 8 (see [[MinGramHash]]).
+    */
+  def minGramHash(s: Column): Column = call_function("min_gram_hash", s)
 
   /** Column-API form of the native int8 max-abs quantizer. */
   def quantizeI8(vec: Column): Column = call_function("quantize_i8", vec)

@@ -6,17 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Engine-portable 64-bit string hash: Karp–Rabin polynomial fold of
-  * the string's code points (`(acc*31 + cp) % 1e9+7` — the q31
-  * fingerprint recurrence) finished by the [[Mix64]] mixer. Exactly
-  * equal to the Column-HOF formulation
-  * `mix64(aggregate(transform(split(s,''), ascii), 0, (a,x) -> (a*31+x) % 1000000007))`
-  * it replaces in hot paths (the interpreted nested-HOF form
-  * dominated q35's runtime), and to the DuckDB
+/** Engine-portable 64-bit string hash: the [[KarpRabin]] fold of the
+  * string's code points (`(acc*31 + cp) % 1e9+7`, q31's `poly_hash`)
+  * finished by the [[Mix64]] mixer. It equals the DuckDB
   * `list_reduce(list_transform(string_split(t,''), ascii), ...)` +
-  * HUGEINT-mix oracle idiom — every step is mod-2^64 integer
-  * arithmetic with constants < 2^63. Whole-stage codegen via a
-  * shared kernel.
+  * HUGEINT-mix oracle idiom: every step is mod-2^64 integer arithmetic
+  * with constants < 2^63. Whole-stage codegen via the shared kernels.
   */
 case class PortableHash64(child: Expression) extends UnaryExpression {
 
@@ -42,15 +37,5 @@ case class PortableHash64(child: Expression) extends UnaryExpression {
 
 object PortableHash64 {
   /** Shared kernel for interpreted eval and generated code. */
-  def hash(s: UTF8String): Long = {
-    var p = 0L
-    val str = s.toString
-    var i = 0
-    while (i < str.length) {
-      val cp = str.codePointAt(i)
-      p = (p * 31 + cp) % 1000000007L
-      i += Character.charCount(cp)
-    }
-    Mix64.mix(p)
-  }
+  def hash(s: UTF8String): Long = Mix64.mix(KarpRabin.fold(s))
 }

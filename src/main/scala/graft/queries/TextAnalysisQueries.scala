@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.plans.GraftFunctions
 
 /** Text-analysis operators over `documents` (SURVEY.md §2.2 EXT /
   * north-star "text analysis"): per-doc token statistics, per-language
@@ -165,33 +166,16 @@ object TextAnalysisQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** Split to single characters, dropping the trailing empty string
-    * Spark's `split(s, "")` (Java `split` with limit -1) produces —
-    * DuckDB's `string_split(s, '')` has no such artifact.
-    */
-  private def chars(c: Column): Column =
-    filter(split(c, ""), ch => length(ch) > 0)
-
-  /** Polynomial rolling hash of a string column: left fold of
-    * `acc*31 + codepoint`, optionally mod a prime. Matches DuckDB's
-    * `list_reduce` (seeded with the first element ≡ fold from 0).
-    */
-  private def polyHash(text: Column, mod: Option[Long]): Column = {
-    val codes = transform(chars(text), ch => ascii(ch).cast("long"))
-    mod match {
-      case Some(p) =>
-        aggregate(codes, lit(0L), (a, x) => (a * 31 + x) % p)
-      case None =>
-        aggregate(codes, lit(0L), (a, x) => a * 31 + x)
-    }
-  }
-
   /** Document fingerprinting (north-star "document fingerprinting"):
     * a whole-text Karp–Rabin polynomial hash plus a winnowing-style
     * minimum over rolling 8-gram hashes. Both are order-sensitive —
     * near-identical docs that differ anywhere get different
     * poly_hash but usually share min_gram_hash (the winnow survives
     * local edits), which is exactly the fingerprint-dedup trade-off.
+    * Both columns are native expressions over one shared kernel
+    * (`plans.KarpRabin`): one walk of the UTF-8 bytes per row, the
+    * 8-gram hashes rolled in O(1) each, NULL for texts shorter than
+    * one 8-gram as in the oracle's empty range.
     */
   val q31Fingerprint = QueryDef(
     "q31_fingerprint",
@@ -205,19 +189,12 @@ object TextAnalysisQueries {
       |                      (acc, x) -> acc*31 + x))) AS min_gram_hash
       |FROM documents
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
+    GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(
         col("doc_id"),
-        polyHash(col("text"), Some(1000000007L)).as("poly_hash"),
-        // texts shorter than one 8-gram have no rolling hashes: the
-        // oracle's empty range yields NULL, but Spark's sequence(1, n)
-        // with n < 1 DESCENDS (sequence(1,-3) = [1,0,...]) — guard to
-        // the oracle's empty-range → NULL semantics
-        when(length(col("text")) < 8, lit(null).cast("long"))
-          .otherwise(array_min(transform(
-            transform(sequence(lit(1), length(col("text")) - 7),
-              i => col("text").substr(i, lit(8))),
-            g => polyHash(g, None)))).as("min_gram_hash"))
+        GraftFunctions.polyHash(col("text")).as("poly_hash"),
+        GraftFunctions.minGramHash(col("text")).as("min_gram_hash"))
       .orderBy(col("doc_id"))
   }
 

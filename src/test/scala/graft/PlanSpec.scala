@@ -705,4 +705,17 @@ class PlanSpec extends SparkSpec {
     assert(unsupported.isEmpty,
       s"hints Spark dropped: ${unsupported.mkString("; ")}")
   }
+
+  test("q31 fingerprint plans no higher-order function or lambda") {
+    val df = Registry.byName("q31_fingerprint").fn(spark, sfDir)
+    df.collect()
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val lambdas = helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.catalyst.expressions.HigherOrderFunction => e.prettyName
+        case e: org.apache.spark.sql.catalyst.expressions.LambdaFunction => e.prettyName
+      })
+    }.flatten.distinct
+    assert(lambdas.isEmpty, "q31 runs interpreted lambdas")
+  }
 }

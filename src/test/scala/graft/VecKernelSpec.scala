@@ -165,4 +165,74 @@ class VecKernelSpec extends SparkSpec {
         "vec_dot(array(1.0D, 2.0D), array(1.0D, CAST(NULL AS DOUBLE))) AS e").head()
     assert(r.isNullAt(0) && r.isNullAt(1))
   }
+
+  /** q31's replaced interpreted spelling: `filter(split(s, ""))`
+    * makes one string per code point, `ascii` reads it back, and
+    * `aggregate` folds; the 8-gram minimum repeats that over every
+    * `substr` of 8 code points.
+    */
+  private def foldHof(s: org.apache.spark.sql.Column, mod: Option[Long]) = {
+    val codes = transform(filter(split(s, ""), ch => length(ch) > 0),
+      ch => ascii(ch).cast("long"))
+    mod match {
+      case Some(p) => aggregate(codes, lit(0L), (a, x) => (a * 31 + x) % p)
+      case None => aggregate(codes, lit(0L), (a, x) => a * 31 + x)
+    }
+  }
+
+  private def minGramHof(s: org.apache.spark.sql.Column) =
+    when(length(s) < 8, lit(null).cast("long"))
+      .otherwise(array_min(transform(
+        transform(sequence(lit(1), length(s) - 7), i => s.substr(i, lit(8))),
+        g => foldHof(g, None))))
+
+  test("poly_hash, min_gram_hash and portable_hash64 equal the interpreted HOF fold") {
+    // 1-, 2-, 3- and 4-byte UTF-8 code points (U+10FFFF, the largest,
+    // among them) and combining marks
+    val pool = Seq(0x61, 0x5a, 0x20, 0x2e, 0x37, 0xe9, 0xdf, 0x416, 0x3c9,
+      0x301, 0x308, 0x20ac, 0x4e2d, 0x3042, 0xfeff, 0x1f600, 0x1d11e, 0x10ffff)
+    def str(cps: Seq[Int]): String =
+      cps.map(cp => new String(Character.toChars(cp))).mkString
+    val rnd = new scala.util.Random(31)
+    val random = Seq.fill(300)(str(Seq.fill(rnd.nextInt(40))(pool(rnd.nextInt(pool.size)))))
+    val edges = Seq("", "abcdefg", str(Seq.fill(7)(0x1f600)), "abcdefgh",
+      "é\u0301ü中😀a b", str(Seq.fill(8)(0x10ffff)), "abcdefghi",
+      str(Seq.fill(9)(0x10ffff)), null)
+    val texts = random ++ edges
+    // the shuffle keeps the projections out of the local relation, so
+    // they run in generated code
+    val df = texts.zipWithIndex.toDF("s", "i").repartition(3)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().toSeq.sortBy(_.getInt(0)).map(r => org.apache.spark.sql.Row(r.toSeq.tail: _*))
+    val want = df.select(col("i"), col("s"), foldHof(col("s"), Some(1000000007L)),
+      minGramHof(col("s")), GraftFunctions.mix64(foldHof(col("s"), Some(1000000007L))))
+    val got = df.select(col("i"), col("s"), GraftFunctions.polyHash(col("s")),
+      GraftFunctions.minGramHash(col("s")), GraftFunctions.portableHash64(col("s")))
+    val w = rows(want)
+    assert(w.count(r => !r.isNullAt(2)) > 100 && w.count(r => r.isNullAt(2)) > 10,
+      "fixture: both sides of the 8-code-point cut-off")
+    val g = rows(got)
+    val bad = g.zip(w).filter { case (a, b) => a != b }
+    assert(g.size == w.size && bad.isEmpty, s"native vs HOF: ${bad.take(3)}")
+    // the interpreted path (no codegen) of the same expressions
+    val interpreted = texts.map { s =>
+      val u = if (s == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      val row = org.apache.spark.sql.catalyst.InternalRow(u)
+      val in = org.apache.spark.sql.catalyst.expressions
+        .BoundReference(0, org.apache.spark.sql.types.StringType, nullable = true)
+      org.apache.spark.sql.Row(s,
+        graft.plans.PolyHash(in).eval(row),
+        graft.plans.MinGramHash(in).eval(row),
+        graft.plans.PortableHash64(in).eval(row))
+    }
+    val badEval = interpreted.zip(w).filter { case (a, b) => a != b }
+    assert(badEval.isEmpty, s"interpreted eval vs HOF: ${badEval.take(3)}")
+  }
+
+  test("poly_hash and min_gram_hash reject a non-STRING input at analysis") {
+    Seq("poly_hash", "min_gram_hash").foreach { f =>
+      val msg = analysisError(s"SELECT $f(1L)")
+      assert(msg.contains(s"$f requires a STRING input, got BIGINT"), s"$f: $msg")
+    }
+  }
 }
