@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query at local[32] and
   * prints ONE JSON line. Noise defense: each query runs 3×; the
@@ -17,7 +18,7 @@ object Bench {
       val line = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
       line.trim.split("\\s+")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Load-gate (round-9 verdict task 1): three rounds in a row the
     * canonical bench artifact recorded a co-tenant-contended box (2-3×
@@ -34,7 +35,7 @@ object Bench {
   private def waitForIdle(): (Double, Boolean, Boolean) = {
     val gateEnv = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "0.5")
     if (gateEnv.equalsIgnoreCase("off")) return (loadAvg1m(), false, false)
-    val gate = try gateEnv.toDouble catch { case _: Throwable => 0.5 }
+    val gate = try gateEnv.toDouble catch { case NonFatal(_) => 0.5 }
     val maxWaitSec =
       sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX_WAIT", "900").toLong
     val deadline = System.nanoTime() + maxWaitSec * 1000000000L
@@ -66,7 +67,7 @@ object Bench {
     // startup (~3-5 s): touch every table once
     graft.Tables.all.foreach { t =>
       try graft.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // a failed run records -1 (NOT its elapsed time — a swallowed
     // exception must not masquerade as a fast run)
@@ -82,7 +83,7 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
       // release query-scoped persisted inputs (dedup shingle postings)
       // so cached blocks don't accumulate across the 59-query session
@@ -170,7 +171,7 @@ object Bench {
     // subset runs (SPARK_GRAFT_ONLY) skip it — their per-query mean
     // is not comparable to a full-suite artifact's.
     val refPerQuery: Option[Double] = sys.env.get("SPARK_GRAFT_BENCH_REF")
-      .flatMap(v => try Some(v.toDouble) catch { case _: Throwable => None })
+      .flatMap(v => try Some(v.toDouble) catch { case NonFatal(_) => None })
       .orElse {
         if (only.nonEmpty) None
         else try {
@@ -186,13 +187,13 @@ object Bench {
                   nq <- "\"n_queries\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
                 } cands += ((m.group(1).toInt,
                   tot.group(1).toDouble / nq.group(1).toInt))
-              } catch { case _: Throwable => () }
+              } catch { case NonFatal(_) => () }
             }
           } finally stream.close()
           if (cands.isEmpty) None
           else { val top = cands.map(_._1).max
             Some(cands.filter(_._1 == top).map(_._2).min) }
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
       }
     def dirty(rs: Map[String, (Double, Double, Double)]): Boolean =
       outliersOf(rs) > 2 || majorSpreadOf(rs) > 2.5

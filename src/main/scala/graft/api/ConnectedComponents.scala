@@ -25,21 +25,20 @@ import org.apache.spark.sql.functions._
   *    plan — without it the lineage (and Catalyst analysis time)
   *    grows linearly with rounds, the classic iterative-algorithm
   *    trap.
-  *  - Convergence is detected via the SUM of labels: labels only
-  *    ever decrease, so the sum is strictly monotone while anything
-  *    changes and equal exactly at the fixpoint — one cheap scalar
-  *    action per round instead of a change-count join.
+  *  - Each round runs on [[Supersteps]]: its one checkpoint job also
+  *    observes how many labels the round lowered, and the loop stops
+  *    on the first round that lowered none — the fixpoint test costs
+  *    no Spark job of its own.
   *  - For adversarial long-path graphs (diameter ≫ log n) the
   *    textbook upgrade is alternating large-star/small-star
   *    contraction (O(log² n) rounds; Kiveris et al., "Connected
   *    Components in MapReduce and Beyond", SoCC 2014 — public
   *    literature). Duplicate graphs never look like that, so simple
   *    propagation stays the default — but when the round cap is hit
-  *    without a fixpoint, [[label]] now FALLS BACK to
-  *    [[starContract]] instead of failing, so a path-shaped graph of
-  *    length ≫ maxRounds still labels correctly (pinned by the
-  *    `ScaleSpec` chain fixture). Pass `fallbackToStar = false` to
-  *    restore the hard failure.
+  *    without a fixpoint, [[label]] FALLS BACK to [[starContract]],
+  *    so a path-shaped graph of length ≫ maxRounds still labels
+  *    correctly (pinned by the `ScaleSpec` chain fixture);
+  *    [[starContract]] throws at its own cap.
   */
 object ConnectedComponents {
 
@@ -49,32 +48,20 @@ object ConnectedComponents {
     *              isolated nodes come out as their own component)
     * @param edges two-column DataFrame `u`, `v` (undirected; may
     *              contain duplicates, either orientation)
-    * @param maxRounds safety cap on propagation rounds
-    * @param fallbackToStar on cap-hit without a fixpoint, rerun via
-    *                       [[starContract]] (O(log² n) rounds regardless
-    *                       of diameter) instead of throwing
+    * @param maxRounds propagation rounds before falling back to
+    *                  [[starContract]] (O(log² n) rounds regardless of
+    *                  diameter)
     * @return DataFrame (`id`, `component`) where `component` is the
     *         min id reachable from `id`
     */
-  def label(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
-      fallbackToStar: Boolean = true): DataFrame = {
-    // integral ids only: the min-label algebra and the decimal
-    // convergence checksum are exact for integers; strings would
-    // propagate lexicographic minima but checksum as null (silently
-    // "converged"), and doubles would truncate in the checksum
-    import org.apache.spark.sql.types._
-    val idType = nodes.schema("id").dataType
-    require(Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"ConnectedComponents needs an integral id column, got ${idType.sql}")
+  def label(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50): DataFrame = {
+    requireIntegralIds(nodes)
     val sym = edges.select(col("u"), col("v"))
       .union(edges.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .localCheckpoint()
-    var labels = nodes.select(col("id"), col("id").as("lbl")).localCheckpoint()
-    var prevSum: BigDecimal = null
-    var curSum = checksum(labels)
-    var round = 0
-    while ((prevSum == null || curSum < prevSum) && round < maxRounds) {
+    val init = nodes.select(col("id"), col("id").as("lbl")).localCheckpoint()
+    val out = Supersteps.run("cc.label", init, maxRounds) { (labels, _) =>
       val nbrMin = sym
         .join(labels.select(col("id").as("v"), col("lbl").as("vlbl")), "v")
         .groupBy(col("u"))
@@ -83,24 +70,14 @@ object ConnectedComponents {
       val next = labels
         .join(nbrMin, Seq("id"), "left_outer")
         .select(col("id"),
-          least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"))
-        .localCheckpoint()
-      labels = next
-      prevSum = curSum
-      curSum = checksum(labels)
-      round += 1
+          least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"),
+          (col("nbr") < col("lbl")).as("lowered"))
+      (next, col("lowered"))
     }
-    if (round >= maxRounds && prevSum != null && curSum < prevSum) {
-      // exiting via the cap, not the fixpoint: labels are NOT final.
-      // A silent return would hand the caller wrong components — so
-      // either fail loudly or switch to the diameter-independent
-      // star-contraction algorithm.
-      if (fallbackToStar) return starContract(nodes, edges)
-      throw new IllegalStateException(
-        s"ConnectedComponents did not converge within $maxRounds rounds " +
-          "(graph diameter exceeds the cap); raise maxRounds")
-    }
-    labels.select(col("id"), col("lbl").as("component"))
+    // exiting via the cap, not the fixpoint: labels are NOT final, so
+    // switch to the diameter-independent star contraction
+    if (!out.converged) starContract(nodes, edges)
+    else out.state.select(col("id"), col("lbl").as("component"))
   }
 
   /** Alternating large-star/small-star edge contraction (Kiveris et
@@ -114,94 +91,71 @@ object ConnectedComponents {
     * read straight off the edges. Each half-round is one groupBy +
     * one keyed join — the same shuffle class as propagation — and the
     * edge set never grows beyond the input edge count.
+    *
+    * Progress is the number of output edges a half-round produced by
+    * moving an edge to a new endpoint: zero exactly when the round's
+    * input was already a star forest — a node with both a smaller and
+    * a larger neighbor rewires in the large-star half, and a node with
+    * two smaller neighbors in the small-star half.
     */
   def starContract(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 50): DataFrame = {
-    val idType = nodes.schema("id").dataType
-    import org.apache.spark.sql.types._
-    require(Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"ConnectedComponents needs an integral id column, got ${idType.sql}")
-    // canonical undirected edges, no self-loops
-    var e = edges
+    requireIntegralIds(nodes)
+    // canonical undirected edges (u < v), no self-loops
+    val init = edges
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint()
 
+    // one row per output edge; rewired if any row producing it was
+    def dedup(ed: DataFrame): DataFrame =
+      ed.groupBy(col("u"), col("v")).agg(max(col("rewired")).as("rewired"))
+
     def largeStar(ed: DataFrame): DataFrame = {
       val sym = ed.union(ed.select(col("v").as("u"), col("u").as("v")))
       val mn = sym.groupBy(col("u"))
         .agg(min(col("v")).as("mnv"))
         .select(col("u"), least(col("u"), col("mnv")).as("m"))
-      sym.join(mn, "u")
+      dedup(sym.join(mn, "u")
         .filter(col("v") > col("u"))
-        .select(col("m").as("u"), col("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
+        .select(col("m").as("u"), col("v"), (col("m") =!= col("u")).as("rewired")))
     }
 
     def smallStar(ed: DataFrame): DataFrame = {
       // orient to (big, small); every node's smaller neighbors plus
-      // itself rewire to the minimum of that set
+      // itself rewire to the minimum m of that set: (b, m) stays as
+      // (m, b), every other (b, s) becomes (m, s)
       val or = ed.select(greatest(col("u"), col("v")).as("b"),
-        least(col("u"), col("v")).as("s"))
+        least(col("u"), col("v")).as("s"), col("rewired"))
       val mn = or.groupBy(col("b")).agg(min(col("s")).as("m"))
-      or.join(mn, "b")
-        .select(col("m").as("u"), col("s").as("v"))
-        .union(mn.select(col("m").as("u"), col("b").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
+      val keep = col("s") === col("m")
+      dedup(or.join(mn, "b")
+        .select(col("m").as("u"), when(keep, col("b")).otherwise(col("s")).as("v"),
+          (col("rewired") || !keep).as("rewired")))
     }
 
-    var prev: (Long, BigDecimal) = null
-    var cur = edgeChecksum(e)
-    var round = 0
-    while ((prev == null || cur != prev) && round < maxRounds) {
-      e = smallStar(largeStar(e)).localCheckpoint()
-      prev = cur
-      cur = edgeChecksum(e)
-      round += 1
+    val out = Supersteps.run("cc.starContract", init, maxRounds) { (e, _) =>
+      (smallStar(largeStar(e.select(col("u"), col("v")))), col("rewired"))
     }
-    if (round >= maxRounds && cur != prev)
+    if (!out.converged)
       throw new IllegalStateException(
         s"starContract did not converge within $maxRounds rounds")
     // fixpoint: edges are (root, member) stars; isolated nodes label
     // themselves
     nodes
-      .join(e.select(col("v").as("id"), col("u").as("root")), Seq("id"), "left_outer")
+      .join(out.state.select(col("v").as("id"), col("u").as("root")), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("root"), col("id")).as("component"))
   }
 
-  /** Set-identity checksum for the contraction fixpoint test: (edge
-    * count, sum of per-edge xxhash64) — cheap, order-independent, and
-    * a collision would need two edge SETS with equal count and equal
-    * 64-bit hash sum within one run.
+  /** Integral ids only: the min-label algebra and the fixpoint tests
+    * are written for exact integer ids.
     */
-  private def edgeChecksum(e: DataFrame): (Long, BigDecimal) = {
-    val r = e.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")), lit(0))
-        .cast("decimal(38,0)").as("h")).first()
-    (r.getLong(0), BigDecimal(r.getDecimal(1)))
-  }
-
-  /** Convergence checksum: labels only ever decrease, so the label sum
-    * is strictly monotone until the fixpoint. Summed as decimal(38,0)
-    * — a Long sum could wrap at extreme scale and fake convergence.
-    * The coalesce covers exactly ONE legitimate null (the empty node
-    * set); a null-producing label cast would silently read 0 every
-    * round and fake convergence, so it is checked and rejected (the
-    * integral-id gate in `label` should make that unreachable).
-    */
-  private def checksum(labels: DataFrame): BigDecimal = {
-    val r = labels.agg(
-      count(lit(1)).as("n"),
-      count(col("lbl").cast("decimal(38,0)")).as("castable"),
-      coalesce(sum(col("lbl").cast("decimal(38,0)")), lit(0))
-        .cast("decimal(38,0)").as("s")).first()
-    require(r.getLong(0) == r.getLong(1),
-      "ConnectedComponents labels stopped being numeric — checksum would be meaningless")
-    BigDecimal(r.getDecimal(2))
+  private def requireIntegralIds(nodes: DataFrame): Unit = {
+    import org.apache.spark.sql.types._
+    val idType = nodes.schema("id").dataType
+    require(Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"ConnectedComponents needs an integral id column, got ${idType.sql}")
   }
 }

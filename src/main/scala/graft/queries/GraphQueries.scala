@@ -94,9 +94,13 @@ object GraphQueries {
     * key − 100, forest of 100 chains) so the DuckDB WITH RECURSIVE
     * twin replays the exact walk.
     *
-    * Scale shape: every round is one equi join + localCheckpoint of a
-    * node-table-sized relation; 8 rounds cover depth 256 (the sf0.1
-    * max is 199). Nothing collects; lineage stays O(1).
+    * Scale shape: every round is one equi join of a node-table-sized
+    * relation, checkpointed by [[graft.api.Supersteps]]; each row
+    * carries whether its ancestor is already a root (a joined row
+    * hands its flag on with its ancestor), and the loop stops on the
+    * first round with no unresolved row — ⌈log₂ depth⌉ rounds, read
+    * off the checkpoint job itself. Nothing collects; lineage stays
+    * O(1).
     */
   val q131HierarchyFlatten = QueryDef(
     "q131_hierarchy_flatten",
@@ -109,31 +113,23 @@ object GraphQueries {
       |  CAST(d AS BIGINT) AS depth
       |FROM walk WHERE cur < 100
       |ORDER BY p_partkey""".stripMargin) { (s, d) =>
-    var anc = Tables.load(s, d, "part").select(col("p_partkey").as("node"))
+    val init = Tables.load(s, d, "part").select(col("p_partkey").as("node"))
       .select(col("node"),
         when(col("node") >= 100, col("node") - 100).otherwise(col("node"))
           .as("anc"),
         when(col("node") >= 100, 1L).otherwise(0L).as("dist"))
+      // resolved: the ancestor is a root (a key below 100)
+      .withColumn("resolved", col("anc") < 100)
       .localCheckpoint()
-    // rounds derived from the DATA, not a constant: the deepest chain
-    // is max(key)/100 under the synthetic parent rule, and r doubling
-    // rounds cover depth 2^r — a fixed 8 silently under-resolved the
-    // 10x corpus (depth ~2000 needs 11; caught by the sf1 hash gate).
-    // One scalar max() job; overshoot rounds are fixpoint no-ops.
-    val maxKeyRow = anc.agg(max(col("node"))).head()
-    // empty forest: max is NULL — one round over nothing is a no-op
-    val maxDepth = math.max(1L,
-      (if (maxKeyRow.isNullAt(0)) 0L else maxKeyRow.getLong(0)) / 100L)
-    // ceil(log2(maxDepth)): after r rounds a jump spans 2^r parents
-    val rounds = math.max(1,
-      64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxDepth - 1)))
-    for (_ <- 1 to rounds) {
-      anc = anc.alias("a")
-        .join(anc.alias("b"), col("a.anc") === col("b.node"))
+    // 63 doubling rounds span any depth a BIGINT key can have
+    val anc = graft.api.Supersteps.run("q131", init, 63) { (st, _) =>
+      val next = st.alias("a")
+        .join(st.alias("b"), col("a.anc") === col("b.node"))
         .select(col("a.node").as("node"), col("b.anc").as("anc"),
-          (col("a.dist") + col("b.dist")).as("dist"))
-        .localCheckpoint()
-    }
+          (col("a.dist") + col("b.dist")).as("dist"),
+          col("b.resolved").as("resolved"))
+      (next, !col("resolved"))
+    }.state
     anc.select(col("node").as("p_partkey"), col("anc").as("root"),
       col("dist").as("depth"))
       .orderBy(col("p_partkey"))
@@ -204,7 +200,9 @@ object GraphQueries {
     * 4-hop neighborhood: enough to coalesce the dense co-purchase
     * clusters this graph has, while an oscillation (the known
     * synchronous-LPA bipartite artifact) just freezes at round 4
-    * identically in both engines.
+    * identically in both engines. The loop stops early only when a
+    * round changes no label: every later round would repeat it, so the
+    * output is the 4-round one.
     *
     * Scale shape: edges are the memoized support ≥ 2 relation
     * (`MiningQueries.pairSupport`, shared with q100/q116); each round
@@ -261,48 +259,23 @@ object GraphQueries {
       |SELECT l4.node, l4.lbl AS community, cs.csize
       |FROM l4 JOIN cs ON cs.lbl = l4.lbl
       |ORDER BY l4.node""".stripMargin) { (s, d) =>
-    // the api.PageRank / ConnectedComponents iteration convention:
-    // checkpoint the edge relation once; the label relation is
-    // consumed TWICE per round (majority join + isolated-node
-    // fallback) and again by the sizes join, so an unchecked lineage
-    // re-evaluates earlier rounds multiply (2^rounds leaf scans) and
-    // the fused 4-round DAG pays ~0.4 s of AQE re-planning per round.
-    // Round-12 (verdict task 8): whether to ALSO localCheckpoint the
-    // labels each round is SIZE-DEPENDENT — at small node counts the
-    // checkpoint is ~free and killing the re-planning wins (1.90 →
-    // 1.35 s at sf0.1), while at 10× nodes the per-round
-    // materialization costs more than the re-planning it saves
-    // (6.57 checkpointed vs 4.54 fused at sf1) — so the variant is
-    // chosen from the memoized part-table row count (the AutoTune
-    // corpus-estimate convention; parts ⊇ graph nodes). Round 18: the
-    // threshold sits BETWEEN the two measured part-table points —
-    // sf0.1 has 20k part rows and a 4× interleaved A/B read
-    // checkpoint-on 2.5–3.2 s vs fused 3.1–6.2 s there, so the old
-    // 8192 bar (below sf0.1's row count) mis-chose fused; 65536
-    // keeps sf1's measured fused win while fixing sf0.1.
-    // (no pre-partitioning or re-checkpoint on e2: pairSupport is
-    // already a memoized localCheckpoint, so the symmetrized view is
-    // two cheap scans of it; and the label relation broadcasts —
-    // ~|nodes| rows — so the per-round join moves no edge bytes; the
-    // one real per-round exchange is the (src,lbl) majority count)
-    // part-table row count is the cheap estimate (metadata-only
-    // parquet count); a fixture dir without part.parquet falls back to
-    // the exact distinct node count, memoized alike
-    val nodes = scala.util.Try(
-      graft.api.AutoTune.corpusRows(s, d, "part")).getOrElse(
-      graft.SessionMemo.getOrComputeAs[Long](s, s"lpa.nodes:$d") {
-        Tables.lineitem(s, d).select(col("l_partkey"))
-          .distinct().count()
-      })
-    val perRoundCheckpoint = nodes <= 65536L
+    // the label relation is consumed twice per round (majority join +
+    // isolated-node fallback) and again by the sizes join, so every
+    // round is checkpointed; a round that changes no label ends the
+    // loop early, since every later round would repeat it. (No
+    // re-checkpoint on e2: pairSupport is already a memoized
+    // localCheckpoint, so the symmetrized view is two cheap scans of
+    // it; and the label relation broadcasts — ~|nodes| rows — so the
+    // per-round join moves no edge bytes; the one real per-round
+    // exchange is the (src,lbl) majority count.)
     val ed = MiningQueries.pairSupport(s, d).select(col("u"), col("v"))
     val e2 = ed.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(ed.select(col("v").as("src"), col("u").as("dst")))
-    var labels = Tables.lineitem(s, d)
+    val init = Tables.lineitem(s, d)
       .select(col("l_partkey").as("node")).distinct()
       .withColumn("lbl", col("node"))
       .localCheckpoint()
-    for (_ <- 1 to 4) {
+    val communities = graft.api.Supersteps.run("q192", init, 4) { (labels, _) =>
       val maj = e2.join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("src"))
@@ -310,11 +283,12 @@ object GraphQueries {
           .as("mlbl"))
         .withColumnRenamed("src", "node")
       val next = labels.join(maj, Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("mlbl"), col("lbl")).as("lbl"))
-      labels = if (perRoundCheckpoint) next.localCheckpoint() else next
-    }
-    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("csize"))
-    labels.join(sizes, "lbl")
+        .select(col("node"), coalesce(col("mlbl"), col("lbl")).as("lbl"),
+          (col("mlbl") =!= col("lbl")).as("changed"))
+      (next, col("changed"))
+    }.state
+    val sizes = communities.groupBy(col("lbl")).agg(count(lit(1)).as("csize"))
+    communities.join(sizes, "lbl")
       .select(col("node"), col("lbl").as("community"), col("csize"))
       .orderBy(col("node"))
   }
@@ -330,7 +304,9 @@ object GraphQueries {
     * sf0.01, 5 at sf0.1 — measured); the FIXED round count keeps the
     * orbit engine-replayable even on a pathological chain where 6
     * wouldn't converge (the q192 fixed-iteration contract: both
-    * engines freeze identically).
+    * engines freeze identically). A round that peels nothing ends the
+    * loop early — every later round would peel nothing too — so the
+    * output is the 6-round one.
     *
     * Output: every graph node with its peel round (1–6) or 0 for core
     * survivors — the "onion layer" a curation pipeline uses to rank
@@ -340,9 +316,10 @@ object GraphQueries {
     * (`MiningQueries.pairSupport`, the q100/q116/q144/q192 share);
     * each round is one alive⋈edges⋈alive degree count (two semi-join-
     * shaped equi joins + a partial-aggregable count, never a window)
-    * followed by a node-table-sized split, localCheckpointed so round
-    * r+1's lineage doesn't re-run round r. Peeled layers accumulate
-    * as a union of disjoint node sets — ≤ |V| rows total.
+    * that stamps the round on each newly peeled node of one
+    * node-table-sized (node, peel_round) relation, checkpointed by
+    * [[graft.api.Supersteps]] so round r+1's lineage doesn't re-run
+    * round r.
     *
     * Oracle: 6 unrolled MATERIALIZED CTE rounds (the q192 convention).
     */
@@ -380,26 +357,25 @@ object GraphQueries {
       val ed = MiningQueries.pairSupport(s, d).select(col("u"), col("v"))
       val e2 = ed.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(ed.select(col("v").as("src"), col("u").as("dst")))
-      val nodes = e2.select(col("src").as("node")).distinct().localCheckpoint()
-      var alive = nodes
-      var peeled = nodes.filter(lit(false))
-        .withColumn("pr", lit(0L)) // empty (node, pr) accumulator
-      for (r <- 1 to 6) {
+      // one (node, peel_round) relation: 0 while a node survives
+      val init = e2.select(col("src").as("node")).distinct()
+        .withColumn("peel_round", lit(0L))
+        .localCheckpoint()
+      val layers = graft.api.Supersteps.run("q198", init, 6) { (st, r) =>
+        val alive = st.filter(col("peel_round") === 0L).select(col("node"))
         val deg = e2
           .join(alive.withColumnRenamed("node", "src"), "src")
           .join(alive.withColumnRenamed("node", "dst"), "dst")
           .groupBy(col("src")).agg(count(lit(1)).as("d"))
           .withColumnRenamed("src", "node")
-        val st = alive.join(deg, Seq("node"), "left_outer")
-          .select(col("node"), coalesce(col("d"), lit(0L)).as("d"))
-          .localCheckpoint()
-        peeled = peeled.unionAll(
-          st.filter(col("d") < 2).select(col("node"), lit(r.toLong).as("pr")))
-        alive = st.filter(col("d") >= 2).select(col("node"))
-      }
-      nodes.join(peeled, Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("pr"), lit(0L)).as("peel_round"),
-          when(col("pr").isNull, 1L).otherwise(0L).as("in_core"))
+        val next = st.join(deg, Seq("node"), "left_outer")
+          .select(col("node"),
+            when(col("peel_round") === 0L && coalesce(col("d"), lit(0L)) < 2,
+              lit(r.toLong)).otherwise(col("peel_round")).as("peel_round"))
+        (next, col("peel_round") === r.toLong)
+      }.state
+      layers.select(col("node"), col("peel_round"),
+          when(col("peel_round") === 0L, 1L).otherwise(0L).as("in_core"))
         .orderBy(col("node"))
     }
   }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 /** Dev utility: time one (or more) registered queries in isolation
   * with the exact Bench session config — for chasing per-query
   * regressions without paying the full 79-query run.
@@ -26,6 +28,9 @@ object TimeQuery {
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
     val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
+    // one INFO line per superstep round (operator, round, rows, progress)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.api.Supersteps", org.apache.logging.log4j.Level.INFO)
     // SPARK_GRAFT_CONF="k=v;k=v" sets session confs before timing —
     // e.g. the LSH banding overrides (spark.graft.lsh.*) for
     // scale-ladder runs
@@ -36,7 +41,7 @@ object TimeQuery {
       })
     graft.Tables.all.foreach { t =>
       try graft.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // SPARK_GRAFT_JOBS=1: per-Spark-job wall times for the LAST run of
     // each query — where a multi-stage query's seconds actually go

@@ -112,8 +112,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val nodes = (0L to 9L).toDF("id")
     val edges = (0L to 8L).map(i => (i, i + 1)).toDF("u", "v")
     val e = intercept[IllegalStateException] {
-      ConnectedComponents.label(nodes, edges, maxRounds = 2,
-        fallbackToStar = false)
+      ConnectedComponents.starContract(nodes, edges, maxRounds = 1)
     }
     assert(e.getMessage.contains("did not converge"))
   }
