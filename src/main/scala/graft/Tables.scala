@@ -46,12 +46,12 @@ object Tables {
         // holding the fingerprint it was resolved under: a rewrite
         // replaces it, so stale relations never accumulate.
         val key = s"tables.rel:$path"
-        def memoized = SessionMemo.getOrComputeAs[(String, DataFrame)](
+        def memoized = Reuse.value[(String, DataFrame)](
           spark, key)((fp, resolve(spark, path)))
         val (seen, rel) = memoized
         if (seen == fp) rel
         else {
-          SessionMemo.invalidate(spark, key)
+          Reuse.invalidate(spark, key)
           val (now, fresh) = memoized
           // a concurrent load may have memoized another fingerprint
           if (now == fp) fresh else resolve(spark, path)

@@ -37,7 +37,7 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // a query must release what it cached once its action is done
-        // (`AutoUnpersist`); the release is asynchronous, so poll
+        // (`Reuse.query`); the release is asynchronous, so poll
         if (!cacheReleased(spark, 10000)) {
           System.err.println(s"[verify] $name failed: $Leaked")
           failed += name -> Leaked

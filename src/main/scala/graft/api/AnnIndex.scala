@@ -66,7 +66,7 @@ object AnnIndex {
     * wins over any cell row, old or re-appended) — the simple
     * monotonic contract, documented rather than versioned.
     */
-  def delete(s: SparkSession, dir: String, ids: DataFrame): Unit =
+  def delete(dir: String, ids: DataFrame): Unit =
     ids.select(col("vec_id")).write.mode(SaveMode.Append)
       .parquet(s"$dir/tombstones")
 

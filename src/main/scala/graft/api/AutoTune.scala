@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.SparkSession
 
-import graft.{SessionMemo, Tables}
+import graft.{Reuse, Tables}
 
 /** Corpus-size-derived defaults for the sketch/index parameters — the
   * closing move on the two measured fixed-parameter scale traps in
@@ -41,7 +41,7 @@ object AutoTune {
     * auto-tuned operator in the session shares the one number.
     */
   def corpusRows(s: SparkSession, dir: String, table: String = "embeddings"): Long =
-    SessionMemo.getOrComputeAs[Long](s, s"autotune.rows:$dir:$table") {
+    Reuse.value[Long](s, s"autotune.rows:$dir:$table") {
       (table match {
         case "embeddings" => Tables.embeddings(s, dir)
         case "documents" => Tables.documents(s, dir)
@@ -142,7 +142,7 @@ object AutoTune {
   /** In-plan twin of [[dfCap]]: derive the cap as a COLUMN of the
     * broadcast 1-row postings count, so the derivation costs zero
     * extra Spark actions (no driver round-trip, and no early
-    * `AutoUnpersist` release from counting the scoped postings
+    * `Reuse.query` release from counting the scoped postings
     * relation before the main query runs).
     */
   def dfCapCol(postings: org.apache.spark.sql.Column, floor: Long): org.apache.spark.sql.Column = {

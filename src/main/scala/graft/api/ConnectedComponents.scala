@@ -60,7 +60,7 @@ object ConnectedComponents {
       .union(edges.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .localCheckpoint()
-    val init = nodes.select(col("id"), col("id").as("lbl")).localCheckpoint()
+    val init = nodes.select(col("id"), col("id").as("lbl"))
     val out = Supersteps.run("cc.label", init, maxRounds) { (labels, _) =>
       val nbrMin = sym
         .join(labels.select(col("id").as("v"), col("lbl").as("vlbl")), "v")
@@ -107,7 +107,6 @@ object ConnectedComponents {
         greatest(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint()
 
     // one row per output edge; rewired if any row producing it was
     def dedup(ed: DataFrame): DataFrame =

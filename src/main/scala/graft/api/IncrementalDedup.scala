@@ -38,7 +38,7 @@ object IncrementalDedup {
     * (doc_id, sh) exact-verify sets.
     */
   def buildIndex(docs: DataFrame): DedupIndex = {
-    val posts = graft.AutoUnpersist.scoped(DedupQueries.shinglePostingsOf(docs))
+    val posts = graft.Reuse.query(DedupQueries.shinglePostingsOf(docs))
     DedupIndex(
       bands = DedupQueries.minhashBandsOf(posts),
       shingles = DedupQueries.shingleSetsOf(posts))
@@ -53,14 +53,16 @@ object IncrementalDedup {
     * would re-run the whole postings pipeline for the second file.
     */
   def writeIndex(docs: DataFrame, dir: String): Unit =
-    withPostings(docs)(writeFrom(_, dir, SaveMode.Overwrite))
+    graft.Reuse.within(DedupQueries.shinglePostingsOf(docs))(
+      writeFrom(_, dir, SaveMode.Overwrite))
 
   /** Index maintenance: fold a new (already-deduped) batch INTO the
     * stored index so later batches dedup against it too. Append-only
     * parquet — no rewrite of the existing 100 TB index.
     */
   def appendIndex(newDocs: DataFrame, dir: String): Unit =
-    withPostings(newDocs)(writeFrom(_, dir, SaveMode.Append))
+    graft.Reuse.within(DedupQueries.shinglePostingsOf(newDocs))(
+      writeFrom(_, dir, SaveMode.Append))
 
   /** The one index write of build and append. Band rows are clustered
     * by `band` first, so a write adds one file per band it touches,
@@ -70,16 +72,6 @@ object IncrementalDedup {
     DedupQueries.minhashBandsOf(posts).repartition(col("band")).write.mode(mode)
       .partitionBy("band").parquet(s"$dir/bands")
     DedupQueries.shingleSetsOf(posts).write.mode(mode).parquet(s"$dir/shingles")
-  }
-
-  /** Shingle postings computed once and persisted for the scope of
-    * `f` (eager method lifecycle, so the release is explicit, not
-    * listener-based).
-    */
-  private[graft] def withPostings[A](docs: DataFrame)(f: DataFrame => A): A = {
-    val posts = DedupQueries.shinglePostingsOf(docs).persist()
-    try f(posts)
-    finally { posts.unpersist(blocking = false); () }
   }
 
   def readIndex(spark: SparkSession, dir: String): DedupIndex =
@@ -99,7 +91,7 @@ object IncrementalDedup {
   def newDupPairs(
       newDocs: DataFrame, ix: DedupIndex,
       threshold: Double = 0.8): DataFrame =
-    probePairs(graft.AutoUnpersist.scoped(DedupQueries.shinglePostingsOf(newDocs)),
+    probePairs(graft.Reuse.query(DedupQueries.shinglePostingsOf(newDocs)),
       ix, threshold)
 
   /** The probe kernel, from already-built (ideally persisted) batch

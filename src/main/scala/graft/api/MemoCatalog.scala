@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Durable, fingerprint-keyed catalog for expensive derived relations
-  * — the cross-SESSION layer under [[graft.SessionMemo]]'s
-  * cross-QUERY layer. A 100 TB pipeline cannot recompute the MinHash
+  * — what [[graft.Reuse.session]] reads through when a memo declares
+  * `durable` inputs, so the memo outlives the session. A 100 TB
+  * pipeline cannot recompute the MinHash
   * cluster assignment or the semantic-pair relation per process: it
   * persists them once per corpus snapshot and re-reads until the
   * corpus changes. This generalizes what [[AnnIndex]] (durable IVF
@@ -40,16 +41,11 @@ import org.apache.spark.sql.functions._
   * session, but a scan is the floor for noticing change without a
   * versioned-table contract, and it is orders cheaper than the
   * builds it guards (LSH banding, verify joins, component rounds).
-  * Callers who DO have a versioned-table contract (a lakehouse
-  * snapshot id, a partition watermark) should use
-  * [[readThroughVersioned]], which substitutes the token for the
-  * scan entirely — zero input reads on a warm reuse.
   *
   * Enablement: set session conf `spark.graft.memo.dir`. Unset (the
   * default, and what the driver's correctness runs use), the catalog
-  * is a pass-through to `build.localCheckpoint()` — the SessionMemo
-  * stability convention, byte-identical behavior to the pre-catalog
-  * code path.
+  * is a pass-through, and [[graft.Reuse.session]] pins the built
+  * relation with `localCheckpoint` as it does every session memo.
   *
   * Uses the Hadoop FileSystem API throughout, so `memo.dir` may be
   * local, HDFS, or any object store with a Hadoop connector.
@@ -152,54 +148,17 @@ object MemoCatalog {
 
   /** Read-through accessor: reuse the persisted memo when the inputs'
     * fingerprint matches the manifest, else run `build`, persist it,
-    * swap the manifest, and return a scan of the fresh parquet. The
-    * returned relation is always STABLE (a parquet scan when the
-    * catalog is on; `localCheckpoint` of the built plan when off),
-    * so callers can fan it out to multiple consumers.
+    * swap the manifest, and return a scan of the fresh parquet — a
+    * STABLE relation callers can fan out to multiple consumers. With
+    * the catalog off, `build` is returned as is.
     */
   def readThrough(s: SparkSession, name: String, inputs: Seq[DataFrame])
       (build: => DataFrame): DataFrame =
     s.conf.getOption(DirConf) match {
-      case None => build.localCheckpoint()
+      case None => build
       case Some(root) =>
         require(inputs.nonEmpty, "memo inputs must be declared")
-        readThroughFp(s, root, name, inputs.map(fingerprint).mkString("_"))(build)
-    }
-
-  /** Versioned-input variant: the caller vouches for input identity
-    * with an externally-meaningful snapshot/version token (a lakehouse
-    * snapshot id, a partition watermark, an ingest batch id), and the
-    * catalog skips the fingerprint scan entirely — zero input reads on
-    * a warm reuse. The token IS the invalidation key: the same token
-    * MUST always denote the same input content (the versioned-table
-    * contract); a different token forces a rebuild exactly like a
-    * fingerprint mismatch ("stale-token rebuild"). Use [[readThrough]]
-    * when no such token exists — the fingerprint scan remains the
-    * unversioned fallback. Token and fingerprint keyspaces are
-    * disjoint (`v-` prefix), so switching a memo between the two modes
-    * can never alias a reuse.
-    */
-  def readThroughVersioned(s: SparkSession, name: String, version: String)
-      (build: => DataFrame): DataFrame =
-    s.conf.getOption(DirConf) match {
-      case None => build.localCheckpoint()
-      case Some(root) =>
-        require(version.nonEmpty, "version token must be non-empty")
-        // Injective key: sanitize() folds every non-[letter/digit/./-]
-        // char to '_', so distinct raw tokens like "snap:1" / "snap_1"
-        // would collide and a warm reuse could silently serve the
-        // other version's data. Appending a hash of the RAW bytes
-        // keeps the key filesystem-safe AND distinct per raw token.
-        val rawBytes = version.getBytes("UTF-8")
-        val rawHash = java.lang.Long.toHexString(
-          org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
-            rawBytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-            rawBytes.length, 42) & 0xffffffffL)
-        readThroughFp(s, root, name, s"v-${sanitize(version)}-$rawHash")(build)
-    }
-
-  private def readThroughFp(s: SparkSession, root: String, name: String,
-      fp: String)(build: => DataFrame): DataFrame = {
+        val fp = inputs.map(fingerprint).mkString("_")
         val dir = new Path(root, sanitize(name))
         val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
         val mf = new Path(dir, "manifest.json")

@@ -76,7 +76,7 @@ object Neighbors {
       s"input already has a '$prevCol' or '$nextCol' column")
     require(Seq("__pid", "__rn", "__cnt").forall(c => !df.columns.contains(c)),
       "input already has a '__pid', '__rn' or '__cnt' column")
-    val parts = graft.AutoUnpersist.scoped(
+    val parts = graft.Reuse.query(
       df.repartitionByRange(orderCols: _*)
         .withColumn("__pid", spark_partition_id()))
     val ww = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
@@ -146,7 +146,7 @@ object Neighbors {
     require(Seq("__pid", "__carry_prev", "__carry_next")
         .forall(c => !df.columns.contains(c)),
       "input already has a '__pid', '__carry_prev' or '__carry_next' column")
-    val parts = graft.AutoUnpersist.scoped(
+    val parts = graft.Reuse.query(
       df.repartitionByRange(orderCols: _*)
         .withColumn("__pid", spark_partition_id()))
     val wAsc = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * to a keyed shuffle join when a high-cardinality group column makes
   * them large), so the whole thing is ONE lazy plan with no
   * unpartitioned window anywhere. The range-partitioned input is
-  * cached via [[graft.AutoUnpersist]] so both the sum branch and the
+  * cached via [[graft.Reuse.query]] so both the sum branch and the
   * running-sum branch see identical partition boundaries within the
   * single action that materializes the result, and the cache releases
   * itself when that action completes.
@@ -90,7 +90,7 @@ object Ranking {
       s"input already has a '$cumCol' or '$totalCol' column")
     Seq("__pid", "__off").foreach(c =>
       require(!df.columns.contains(c), s"input already has a '$c' column"))
-    val parts = graft.AutoUnpersist.scoped(
+    val parts = graft.Reuse.query(
       df.repartitionByRange((groupCols.map(col) ++ orderCols): _*)
         .withColumn("__pid", spark_partition_id()))
     // per-(partition, group) sums, then per group: the sums sorted by

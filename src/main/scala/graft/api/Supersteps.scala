@@ -27,6 +27,9 @@ object Supersteps {
     org.apache.logging.log4j.LogManager.getLogger("graft.api.Supersteps")
 
   /** Runs `step` from `initial` until a round moves no row.
+    * `initial` is pinned here, lazily: the first round's checkpoint job
+    * materializes it once for every read of the first state, so
+    * callers pass a plain plan and pay no job of their own for it.
     *
     * @param operator name in the per-round log line
     * @param step `(state, round)` with rounds from 1 → the next state,
@@ -36,7 +39,7 @@ object Supersteps {
   def run(operator: String, initial: DataFrame, maxRounds: Int)(
       step: (DataFrame, Int) => (DataFrame, Column)): Outcome = {
     require(maxRounds >= 1, s"$operator: maxRounds must be >= 1, got $maxRounds")
-    var state = initial
+    var state = initial.localCheckpoint(eager = false)
     var progress = -1L
     var round = 0
     while (progress != 0L && round < maxRounds) {

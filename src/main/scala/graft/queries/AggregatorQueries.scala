@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.{AutoUnpersist, QueryDef, Tables}
+import graft.{QueryDef, Reuse, Tables}
 
 /** Custom / typed aggregation (SURVEY.md §2.2 "custom typed
   * aggregate" + UDx rows): an `Aggregator[IN,BUF,OUT]` registered via
@@ -330,7 +330,7 @@ object AggregatorQueries {
   private[graft] def corpusMerges(
       s: org.apache.spark.sql.SparkSession,
       d: String): Seq[graft.api.BpeTrainer.Merge] =
-    graft.SessionMemo.getOrComputeAs[Seq[graft.api.BpeTrainer.Merge]](
+    graft.Reuse.value[Seq[graft.api.BpeTrainer.Merge]](
       s, "bpe.merges24:" + d) {
       graft.api.BpeTrainer.train(Tables.documents(s, d), "text", 24)
     }
@@ -573,7 +573,7 @@ object AggregatorQueries {
     // exchange the query's exact side pays anyway; a pure-streaming
     // sketch with NO exact twin would instead partial-aggregate
     // (j, bkt) directly for a constant-size exchange.
-    val wc = AutoUnpersist.scoped(
+    val wc = Reuse.query(
       toks.groupBy(col("t")).agg(count(lit(1)).as("cnt")))
     val counters = wc
       .select(col("cnt"), buckets(hmod(col("t"))).as(Seq("j", "bkt")))

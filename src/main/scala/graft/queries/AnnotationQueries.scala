@@ -88,7 +88,7 @@ object AnnotationQueries {
     * entirely on the 10-row matchup metadata.
     */
   def labelMatchups(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "annot.matchups:" + d) {
+    graft.Reuse.session(s, "annot.matchups:" + d) {
       val labels = Seq("click", "error", "purchase", "signup", "view")
       val s0 = Tables.events(s, d)
         .groupBy(col("user_id"), col("event_type"))
@@ -112,7 +112,6 @@ object AnnotationQueries {
         .agg(sum(when(col("a.cents") > col("b.cents"), 1L).otherwise(0L)).as("wa"),
           sum(when(col("b.cents") > col("a.cents"), 1L).otherwise(0L)).as("wb"),
           sum(when(col("a.cents") === col("b.cents"), 1L).otherwise(0L)).as("ties"))
-        .localCheckpoint()
     }
 
   /** Pairwise-preference aggregation via Copeland scoring — the
@@ -358,7 +357,7 @@ object AnnotationQueries {
     // the (item, label) relation feeds BOTH the item aggregate and the
     // label-marginal branch — persist for the query's scope so the
     // event log is scanned once
-    val v = graft.AutoUnpersist.scoped(Tables.events(s, d)
+    val v = graft.Reuse.query(Tables.events(s, d)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("c")))
     val it = v.groupBy(col("user_id"))
@@ -460,7 +459,7 @@ object AnnotationQueries {
     // item-partitioning pre-satisfies vr/c/mx and the vr⋈mj join —
     // the one exchange replaces three
     val sp = s.sparkContext.defaultParallelism
-    val vr = graft.AutoUnpersist.scoped(Tables.events(s, d)
+    val vr = graft.Reuse.query(Tables.events(s, d)
       .repartition(sp, col("user_id"))
       .select(col("user_id").as("item"), col("event_type").as("label"),
         expr("try_cast(get_json_object(props, '$.k') AS bigint)").as("rater"))
@@ -475,7 +474,7 @@ object AnnotationQueries {
       .select(col("item").as("jitem"), col("top_label"))
     // h feeds the corpus-mean aggregate AND the final projection —
     // persist (≤ |raters| rows) so the consensus join runs once
-    val h = graft.AutoUnpersist.scoped(
+    val h = graft.Reuse.query(
       vr.join(mj, col("item") === col("jitem"))
         .groupBy(col("rater"))
         .agg(sum(col("cnt")).as("n_votes"),

@@ -141,10 +141,10 @@ object DedupQueries {
     GraftFunctions.register(s)
     // persisted: feeds the signature pipeline and both exact-verify
     // joins (no cross-branch subplan reuse in Spark). Lifecycle:
-    // AutoUnpersist releases the cache when the first action using
+    // Reuse.query releases the cache when the first action using
     // this plan completes, so standalone library callers don't leak;
     // the harnesses' clearCache stays a harmless second release
-    val posts = graft.AutoUnpersist.scoped(shinglePostings(s, d))
+    val posts = graft.Reuse.query(shinglePostings(s, d))
     val sh = shingleSetsOf(posts)
     // the whole 64-slot signature builds in one native
     // TypedImperativeAggregate pass over the shingle hashes (see
@@ -370,12 +370,10 @@ object DedupQueries {
     * cap-binding fixtures.
     */
   private def candidateCounts(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s, "dedup.ngramcand:" + d) {
-      graft.api.MemoCatalog.readThrough(s, "ngramcand:" + d,
+    graft.Reuse.session(s, "ngramcand:" + d,
         Seq(Tables.documents(s, d).select(col("doc_id"), col("text")))) {
-        ngramCandidateCountsCap(shinglePostings(s, d),
-          autoCap(s, ShingleDfCapConf, ShingleDfFloor))
-      }
+      ngramCandidateCountsCap(shinglePostings(s, d),
+        autoCap(s, ShingleDfCapConf, ShingleDfFloor))
     }
 
   private[graft] def ngramJaccardPairs(
@@ -400,8 +398,8 @@ object DedupQueries {
     // Persisted: feeds the df count, both sides of the self-join, the
     // size table and the hot-set table — Spark has no cross-branch
     // subplan reuse, so without it the shingle pipeline recomputes 5×.
-    // Lifecycle: self-releasing (see AutoUnpersist).
-    val posts = graft.AutoUnpersist.scoped(posts0)
+    // Lifecycle: self-releasing (see Reuse.query).
+    val posts = graft.Reuse.query(posts0)
     // hot = df-capped shingles: ≤ |postings|/cap rows by construction
     // → always broadcast-able. The cap may derive from the broadcast
     // 1-row postings count (__P) — see autoCap/AutoTune.dfCapCol.
@@ -525,8 +523,8 @@ object DedupQueries {
     * (q78/q93/q170) and the cross-source overlap audit (q173).
     */
   private[graft] def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s, "dedup.verpairs:" + d) {
-      minhashVerifiedPairs(s, d).localCheckpoint()
+    graft.Reuse.session(s, "dedup.verpairs:" + d) {
+      minhashVerifiedPairs(s, d)
     }
 
   /** The cluster-assignment relation behind q78/q93/q170/q190/q206 —
@@ -538,16 +536,14 @@ object DedupQueries {
     * data-driven; tests that flip caps leave the catalog off.
     */
   def clusterAssignments(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s, "dedup.clusters:" + d) {
-      graft.api.MemoCatalog.readThrough(s, "clusters:" + d,
+    graft.Reuse.session(s, "clusters:" + d,
         Seq(Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("text")))) {
-        val pairs = verifiedPairs(s, d)
-          .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        val nodes = Tables.documents(s, d).select(col("doc_id").as("id"))
-        graft.api.ConnectedComponents.label(nodes, pairs)
-          .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-      }
+      val pairs = verifiedPairs(s, d)
+        .select(col("doc_a").as("u"), col("doc_b").as("v"))
+      val nodes = Tables.documents(s, d).select(col("doc_id").as("id"))
+      graft.api.ConnectedComponents.label(nodes, pairs)
+        .select(col("id").as("doc_id"), col("component").as("cluster_id"))
     }
 
   /** Leakage-safe split as a standalone operator over a PRECOMPUTED
@@ -988,14 +984,14 @@ object DedupQueries {
     * pipeline is paid once per (session, sf).
     */
   private def calibrationPairs(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s, "dedup.calib:" + d) {
+    graft.Reuse.session(s, "dedup.calib:" + d) {
       GraftFunctions.register(s)
       // portable shingle hashes: same trigram stream as
       // shinglePostingsOf (map-side zipped slices; the repartition
       // spreads the per-token hash work off a single-file scan),
       // hashed with portable_hash64 instead of xxhash64 so the oracle
       // can replay the signatures
-      val posts = graft.AutoUnpersist.scoped(
+      val posts = graft.Reuse.query(
         graft.functions.Ngrams.trigrams(
           Tables.documents(s, d)
             .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
@@ -1031,7 +1027,6 @@ object DedupQueries {
           expr("""(10000 * size(array_intersect(sha, shb)))
                  |  div (size(sha) + size(shb) - size(array_intersect(sha, shb)))""".stripMargin)
             .as("exact_bp"))
-        .localCheckpoint()
     }
 
   /** Sketch-pipeline precision/recall curve — the decision table for
@@ -1431,8 +1426,8 @@ object DedupQueries {
           concat_ws(" ", col("t"), col("t1"), col("t2"))).as("g"))
     // cached: the minimizer sets feed the df count and (via the
     // anti-join) both sides of the pair join plus the size table —
-    // the ngramJaccardPairs lifecycle (AutoUnpersist, self-releasing)
-    val mz = graft.AutoUnpersist.scoped(
+    // the ngramJaccardPairs lifecycle (Reuse.query, self-releasing)
+    val mz = graft.Reuse.query(
       stream
         .select(col("doc_id"),
           min(col("g")).over(fw).as("m"), count(lit(1)).over(fw).as("cnt"))
@@ -1774,7 +1769,7 @@ object DedupQueries {
     // otherwise shuffle ~16-token strings per chunk (measured 5.9× on
     // the 10× ladder; hashed keys read 2.3×) — the q36 hashed-shingle
     // convention, counts unchanged modulo xxhash64 collisions
-    val chunks = graft.AutoUnpersist.scoped(marked
+    val chunks = graft.Reuse.query(marked
       .withColumn("cix", sum(col("b")).over(w))
       .groupBy(col("doc_id"), col("source"), col("cix"))
       .agg(sort_array(collect_list(struct(col("i"), col("t")))).as("st"))
@@ -1872,7 +1867,7 @@ object DedupQueries {
 
   private[graft] def weightedJaccardPairsCap(posts0: DataFrame,
       capOf: Column => Column): DataFrame = {
-    val posts = graft.AutoUnpersist.scoped(posts0)
+    val posts = graft.Reuse.query(posts0)
     val hot = posts.groupBy(col("gh")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(posts.agg(count(lit(1)).as("__P"))))
       .filter(col("df") > capOf(col("__P"))).select(col("gh"))

@@ -120,7 +120,6 @@ object GraphQueries {
         when(col("node") >= 100, 1L).otherwise(0L).as("dist"))
       // resolved: the ancestor is a root (a key below 100)
       .withColumn("resolved", col("anc") < 100)
-      .localCheckpoint()
     // 63 doubling rounds span any depth a BIGINT key can have
     val anc = graft.api.Supersteps.run("q131", init, 63) { (st, _) =>
       val next = st.alias("a")
@@ -274,7 +273,6 @@ object GraphQueries {
     val init = Tables.lineitem(s, d)
       .select(col("l_partkey").as("node")).distinct()
       .withColumn("lbl", col("node"))
-      .localCheckpoint()
     val communities = graft.api.Supersteps.run("q192", init, 4) { (labels, _) =>
       val maj = e2.join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
@@ -360,7 +358,6 @@ object GraphQueries {
       // one (node, peel_round) relation: 0 while a node survives
       val init = e2.select(col("src").as("node")).distinct()
         .withColumn("peel_round", lit(0L))
-        .localCheckpoint()
       val layers = graft.api.Supersteps.run("q198", init, 6) { (st, r) =>
         val alive = st.filter(col("peel_round") === 0L).select(col("node"))
         val deg = e2

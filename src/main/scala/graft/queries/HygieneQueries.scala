@@ -395,7 +395,7 @@ object HygieneQueries {
       |  CAST(floor(10000.0 * coalesce(nov.n_novel, 0) / nt.n_grams) AS BIGINT) AS novelty_bp
       |FROM nt LEFT JOIN nov USING (doc_id)
       |ORDER BY nt.doc_id""".stripMargin) { (s, d) =>
-    val g = graft.AutoUnpersist.scoped(trigrams(Tables.documents(s, d)))
+    val g = graft.Reuse.query(trigrams(Tables.documents(s, d)))
     val top = g.groupBy(col("g")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("g"))
       .limit(500)
@@ -422,12 +422,11 @@ object HygieneQueries {
     */
   private[queries] def corpusBigrams(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "hyg.bigrams:" + d) {
+    graft.Reuse.session(s, "hyg.bigrams:" + d) {
       graft.functions.Ngrams.bigrams(
           Tables.documents(s, d).repartition(
             s.sparkContext.defaultParallelism, col("doc_id")))
         .select(col("doc_id"), col("t").as("l"), col("t1").as("r"))
-        .localCheckpoint()
     }
 
   /** Bigram-LM quality score — the CCNet/KenLM-style perplexity
@@ -538,7 +537,7 @@ object HygieneQueries {
       |ORDER BY n.doc_id""".stripMargin) { (s, d) =>
     val K = 8
     // token arrays feed the span stream AND the per-doc token counts
-    val tok = graft.AutoUnpersist.scoped(
+    val tok = graft.Reuse.query(
       Tables.documents(s, d)
         .select(col("doc_id"), toks(col("text")).as("w"))
         .filter(size(col("w")) > 0))
@@ -739,11 +738,9 @@ object HygieneQueries {
     // conf-capped; the q179/q197 oracle SQL is PINNED at the default 64
     // (the q60 convention) — parity is only defined at default conf
     val cap = maxSuffix(s)
-    graft.SessionMemo.getOrCompute(s, s"hygiene.suflcp:$d:$cap") {
-      graft.api.MemoCatalog.readThrough(s, s"suflcp:$d:$cap",
+    graft.Reuse.session(s, s"suflcp:$d:$cap",
         Seq(Tables.documents(s, d).select(col("doc_id"), col("text")))) {
-        suffixLcp(tokenized(Tables.documents(s, d)), cap)
-      }
+      suffixLcp(tokenized(Tables.documents(s, d)), cap)
     }
   }
 
@@ -1254,7 +1251,7 @@ object HygieneQueries {
     val trbi = bi.filter(col("doc_id") % 2 === 0)
     // persisted: feeds ml, mr, the type total AND the scored join —
     // vocab²-bounded, self-releasing (the ngramCandidateCounts shape)
-    val m = graft.AutoUnpersist.scoped(
+    val m = graft.Reuse.query(
       trbi.groupBy(col("l"), col("r")).agg(count(lit(1)).as("c_lr")))
     val ml = m.groupBy(col("l"))
       .agg(sum(col("c_lr")).as("c_l"), count(lit(1)).as("n1l"))

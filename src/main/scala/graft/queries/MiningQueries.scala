@@ -21,11 +21,10 @@ object MiningQueries {
     * the memo's role is played by writing the edge list to storage.
     */
   def orderBaskets(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "mining.baskets:" + d) {
+    graft.Reuse.session(s, "mining.baskets:" + d) {
       Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .groupBy(col("o")).agg(sort_array(collect_set(col("p"))).as("ps"))
-        .localCheckpoint()
     }
 
   /** u<v part pairs with co-occurrence support ≥ 2 — map-side HOF
@@ -34,7 +33,7 @@ object MiningQueries {
     * are handled explicitly), then one pair-keyed count shuffle.
     */
   def pairSupport(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "mining.pairs:" + d) {
+    graft.Reuse.session(s, "mining.pairs:" + d) {
       val pairCol = when(size(col("ps")) < 2,
         array().cast("array<struct<u:bigint,v:bigint>>"))
         .otherwise(flatten(transform(
@@ -47,7 +46,6 @@ object MiningQueries {
         .groupBy(col("uv.u").as("u"), col("uv.v").as("v"))
         .agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2)
-        .localCheckpoint()
     }
 
   /** Association rules (support / confidence / lift) over per-order
@@ -180,7 +178,7 @@ object MiningQueries {
       // distinct AFTER the union: one partial-aggregated shuffle on
       // (cid, v) replaces 12 per-column distinct stages (measured
       // 2.3 s → 0.9 s for the stacked relation at sf0.1)
-      val stacked = graft.AutoUnpersist.scoped(
+      val stacked = graft.Reuse.query(
         colIds.map { case (t, c) =>
           Tables.load(s, d, t)
             .select(lit(s"$t.$c").as("cid"), col(c).cast("long").as("v"))
@@ -352,7 +350,7 @@ object MiningQueries {
       |        / sqrt(CAST(rt.r AS DOUBLE) * ct.c / n.n), 4) AS residual
       |FROM obs JOIN rt USING (lang) JOIN ct USING (source), n
       |ORDER BY obs.lang, obs.source""".stripMargin) { (s, d) =>
-    val obs = graft.AutoUnpersist.scoped(
+    val obs = graft.Reuse.query(
       Tables.documents(s, d)
         .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o")))
     val rt = obs.groupBy(col("lang")).agg(sum(col("o")).as("r"))
@@ -396,7 +394,7 @@ object MiningQueries {
       |ORDER BY t.from_type, t.to_type""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val t = graft.AutoUnpersist.scoped(
+    val t = graft.Reuse.query(
       Tables.events(s, d)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type").as("from_type"))
@@ -729,7 +727,7 @@ object MiningQueries {
       |ORDER BY tr.from_type""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val tr = graft.AutoUnpersist.scoped(
+    val tr = graft.Reuse.query(
       Tables.events(s, d)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type").as("from_type"))
@@ -944,7 +942,7 @@ object MiningQueries {
         s.range(0).select(lit("").as("fd"), lit(0L).as("n_lhs"),
           lit(0L).as("n_pairs"), lit(false).as("holds"), lit(0L).as("fd_bp"))
       } else {
-        val stacked = graft.AutoUnpersist.scoped(
+        val stacked = graft.Reuse.query(
           survivors.map { case (t, a, b) =>
             Tables.load(s, d, t).select(lit(s"$t.$a->$b").as("fd"),
               xxhash64(col(a)).as("lv"), xxhash64(col(b)).as("rv"))

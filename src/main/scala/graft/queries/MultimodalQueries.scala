@@ -397,7 +397,7 @@ object MultimodalQueries {
     // fingerprints feed both band-join sides AND the survivorship
     // join-back — persist for the query's scope so the WAV parse runs
     // once per blob, not three times
-    val fps = graft.AutoUnpersist.scoped(
+    val fps = graft.Reuse.query(
       MediaOps.audioFingerprints(s, MediaOps.synthesizeAudioGallery(s, d))
         .toDF().select(col("doc_id"), col("n_frames"), col("fp")))
     val bd = fps.select(col("doc_id"), col("fp"),

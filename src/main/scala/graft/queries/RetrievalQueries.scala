@@ -124,8 +124,7 @@ object RetrievalQueries {
     * strategy to read.
     */
   def rankedQualitySignals(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "retrieval.qranks:" + d) {
-      graft.api.MemoCatalog.readThrough(s, "qranks:" + d,
+    graft.Reuse.session(s, "qranks:" + d,
         Seq(Tables.documents(s, d)
           .select(col("doc_id"), col("n_chars"), col("text")))) {
       val per = Tables.documents(s, d)
@@ -143,7 +142,6 @@ object RetrievalQueries {
             Seq(col(sig).desc, col("doc_id")), rk, s"__t_$rk")
             .drop(s"__t_$rk")
         }
-      }
     }
 
   /** Quality-ensemble ranking — rank aggregation (Borda count) over
@@ -465,7 +463,6 @@ object RetrievalQueries {
         "left_outer")
       .groupBy(col("depth"), col("w_num"))
       .agg(count(col("r_len")).as("overlap"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("depth"))
     o.select(col("depth"), col("overlap"),
         expr("(10000 * overlap) div depth").as("agreement_bp"),
         expr("""cast((cast(1000000 as decimal(38,0)) *

@@ -406,7 +406,7 @@ object SamplingQueries {
     }
     // bucketed token stream feeds both model builds and the scoring
     // pass — one tokenize+hash for the whole query
-    val tok = graft.AutoUnpersist.scoped(
+    val tok = graft.Reuse.query(
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
           explode(filter(split(col("text"), " "), t => length(t) > 0)).as("t"))

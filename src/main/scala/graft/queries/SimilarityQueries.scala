@@ -93,16 +93,14 @@ object SimilarityQueries {
       s: SparkSession, t0: DataFrame, k: Int, iters: Int,
       sampleMod: Int = 4): DataFrame = {
     GraftFunctions.register(s)
-    // scoped persist of the TRAINING SAMPLE: each Lloyd iteration is
-    // an action over it (iters scans); released before returning so
-    // no cached blocks outlive the query (round-1 leak lesson)
-    val sample = t0
+    // the TRAINING SAMPLE is cached for the training only: each Lloyd
+    // iteration is an action over it (iters scans), and no cached
+    // blocks outlive the query (round-1 leak lesson)
+    graft.Reuse.within(t0
       .filter(pmod(GraftFunctions.mix64(col("vec_id")), lit(sampleMod)) === 0 ||
         col("vec_id") < k)
-      .withColumn("qv", GraftFunctions.quantizeI8(col("embedding")))
-      .persist()
-    try trainCentroidsOn(s, t0, sample, k, iters)
-    finally { sample.unpersist(blocking = false); () }
+      .withColumn("qv", GraftFunctions.quantizeI8(col("embedding"))))(
+      trainCentroidsOn(s, t0, _, k, iters))
   }
 
   /** Nearest-cell assignment, the one IVF assign step (Lloyd loop,
@@ -170,20 +168,18 @@ object SimilarityQueries {
     */
   private[graft] def corpusCentroids(
       s: SparkSession, d: String, k: Int, iters: Int): DataFrame =
-    graft.SessionMemo.getOrCompute(s, s"sim.cents:$d:$k:$iters") {
-      // durable when spark.graft.memo.dir is set: the Lloyd rounds are
-      // driver-synchronized SEQUENTIAL passes over the corpus — at
-      // 100 TB that is hours per (k, iters) config, exactly what a
-      // pipeline persists per corpus snapshot and re-reads until the
-      // embeddings change. (k, iters) is part of the memo NAME, the
-      // corpus fingerprint is the invalidation key.
-      graft.api.MemoCatalog.readThrough(s, s"cents:$d:$k:$iters",
+    // durable when spark.graft.memo.dir is set: the Lloyd rounds are
+    // driver-synchronized SEQUENTIAL passes over the corpus — at
+    // 100 TB that is hours per (k, iters) config, exactly what a
+    // pipeline persists per corpus snapshot and re-reads until the
+    // embeddings change. (k, iters) is part of the memo NAME, the
+    // corpus fingerprint is the invalidation key.
+    graft.Reuse.session(s, s"cents:$d:$k:$iters",
         Seq(Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding")))) {
-        trainCentroids(s,
-          Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-          k, iters)
-      }
+      trainCentroids(s,
+        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+        k, iters)
     }
 
   private def trainCentroidsOn(
@@ -572,7 +568,7 @@ object SimilarityQueries {
     val cents = centsOpt.getOrElse(trainCentroids(s, t, k, iters))
     // one assignment pass, shared by pair generation (twice inside
     // the salted self-join) and the final keep/drop join
-    val assigned = graft.AutoUnpersist.scoped(
+    val assigned = graft.Reuse.query(
       assignCells(t, cents, "embedding")
         .select(col("vec_id"), col("c_id").as("label"), col("embedding")))
     val dropped = DedupQueries
@@ -596,13 +592,12 @@ object SimilarityQueries {
     * a written table, not a memo (the clusterAssignments discipline).
     */
   private[graft] def semanticAssigned(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s, "sem.assigned:" + d) {
+    graft.Reuse.session(s, "sem.assigned:" + d) {
       GraftFunctions.register(s)
       val t = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val cents = corpusCentroids(s, d, k = 16, iters = 4)
       assignCells(t, cents, "embedding")
         .select(col("vec_id"), col("c_id").as("label"), col("embedding"))
-        .localCheckpoint()
     }
 
   /** Memoized SEMANTIC near-dup pairs `(vec_a < vec_b)` — the q89
@@ -614,20 +609,18 @@ object SimilarityQueries {
     * Σ(cluster²/salt) with per-task work bounded by `MaxLabelBlock`.
     */
   private[graft] def semanticPairs(s: SparkSession, d: String): DataFrame =
-    graft.SessionMemo.getOrCompute(s, "sem.pairs:" + d) {
-      GraftFunctions.register(s)
-      // durable when spark.graft.memo.dir is set: keyed by the
-      // embeddings corpus fingerprint, so the Lloyd iterations and
-      // salted pair scan are paid once per snapshot, not per session
-      graft.api.MemoCatalog.readThrough(s, "sempairs:" + d,
+    // durable when spark.graft.memo.dir is set: keyed by the
+    // embeddings corpus fingerprint, so the Lloyd iterations and
+    // salted pair scan are paid once per snapshot, not per session
+    graft.Reuse.session(s, "sempairs:" + d,
         Seq(Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding")))) {
-        DedupQueries.saltedLabelPairs(semanticAssigned(s, d),
-            DedupQueries.MaxLabelBlock)
-          .filter(round(GraftFunctions.cosineSim(col("ea"), col("eb")), 4)
-            >= 0.85)
-          .select(col("vec_a"), col("vec_b"))
-      }
+      GraftFunctions.register(s)
+      DedupQueries.saltedLabelPairs(semanticAssigned(s, d),
+          DedupQueries.MaxLabelBlock)
+        .filter(round(GraftFunctions.cosineSim(col("ea"), col("eb")), 4)
+          >= 0.85)
+        .select(col("vec_a"), col("vec_b"))
     }
 
   /** Semantic dedup over the embeddings table. FULLY oracle-checked
@@ -1233,9 +1226,9 @@ object SimilarityQueries {
         .as("e"))
       .select(col("*"), col("e.sub").as("sub"), col("e.sv").as("sv"))
       .drop("e", "qv")
-    val cb = subspaces(anch.select(col("code"), col("qv")))
-      .select(col("code"), col("sub"), col("sv").as("cw"))
-      .localCheckpoint() // 128-row codebook, broadcast below
+    // 128-row codebook, broadcast below
+    val cb = graft.Reuse.query(subspaces(anch.select(col("code"), col("qv")))
+      .select(col("code"), col("sub"), col("sv").as("cw")))
     def l2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
     val tv = subspaces(t)
@@ -1246,11 +1239,10 @@ object SimilarityQueries {
       .groupBy(col("vec_id"), col("sub"))
       .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
     // query→codeword lookup tables: 5 queries × 8 subs × 16 codes
-    val qd = tv.filter(col("vec_id") < 5)
+    val qd = graft.Reuse.query(tv.filter(col("vec_id") < 5)
       .join(broadcast(cb), "sub")
       .select(col("vec_id").as("q_id"), col("sub"), col("code"),
-        l2(col("sv"), col("cw")).as("d"))
-      .localCheckpoint()
+        l2(col("sv"), col("cw")).as("d")))
     val adc = enc.join(broadcast(qd), Seq("sub", "code"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
@@ -1544,7 +1536,7 @@ object SimilarityQueries {
     // they replace (same IEEE ops in the same order; see VecQMilli)
     val withNorm = t.withColumn("nrm2",
       GraftFunctions.vecDot(col("v"), col("v")))
-    val u = graft.AutoUnpersist.scoped(
+    val u = graft.Reuse.query(
       withNorm.filter(col("nrm2") > 0)
         .select(col("vec_id"),
           GraftFunctions.vecQMilli(col("v"), col("nrm2")).as("qu")))
@@ -1641,7 +1633,7 @@ object SimilarityQueries {
     val cents = corpusCentroids(s, d, k = k, iters = 6)
     // the assignment+quantization pipeline feeds both join sides —
     // persist for the query's scope so the broadcast argmax runs once
-    val assigned = graft.AutoUnpersist.scoped(assignCells(t, cents, "embedding", "side")
+    val assigned = graft.Reuse.query(assignCells(t, cents, "embedding", "side")
       .select(col("vec_id"), col("c_id"),
         col("embedding").cast("array<double>").as("v"), col("side"))
       .withColumn("nrm2", GraftFunctions.vecDot(col("v"), col("v")))
@@ -1654,7 +1646,7 @@ object SimilarityQueries {
       .select(col("vec_id").as("w"), col("c_id").as("c2"), col("qu").as("qb"))
     // the pair relation feeds three consumers (two endpoint k-NN
     // aggregates + the scoring join) — persist for the query's scope
-    val pr = graft.AutoUnpersist.scoped(
+    val pr = graft.Reuse.query(
       a.join(b, col("c_id") === col("c2"))
         .select(col("u"), col("w"),
           // native exact-long dot (round 17): the interpreted HOF fold
@@ -1669,7 +1661,7 @@ object SimilarityQueries {
           size(col("top")).cast("long").as(s"${key}_n"))
     // sc feeds BOTH mutual-best aggregates — persist so the two
     // endpoint k-NN aggregates run once, not once per direction
-    val sc = graft.AutoUnpersist.scoped(pr
+    val sc = graft.Reuse.query(pr
       .join(knn4("u", "w"), col("u") === col("uk"))
       .join(knn4("w", "u"), col("w") === col("wk"))
       .filter(col("qd") > 0 &&
@@ -1782,7 +1774,7 @@ object SimilarityQueries {
     // the left/row vector's length, so the pad is never read — same
     // values as the old slice+zip_with HOF, which evaluated
     // interpreted: 16 × d lambda steps per row).
-    val proj = graft.AutoUnpersist.scoped(t.withColumn("pl",
+    val proj = graft.Reuse.query(t.withColumn("pl",
       array((0 until 16).map(k =>
         GraftFunctions.vecDot(col("qu"), typedLit(signs(k)))): _*)))
     val a = proj.select(col("vec_id").as("ui"), col("qu").as("qa"), col("pl").as("pla"))

@@ -88,7 +88,7 @@ object SkewQueries {
       |FROM q""".stripMargin) { (s, d) =>
     val kc = Tables.lineitem(s, d)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("c"))
-    val cc = graft.AutoUnpersist.scoped(
+    val cc = graft.Reuse.query(
       kc.groupBy(col("c")).agg(count(lit(1)).as("m")))
     val st = cc.agg(sum(col("m")).as("n_keys"),
       sum(col("c") * col("m")).as("n_rows"), max(col("c")).as("max_c"))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
 /** The `spark.sql` entry path — every other query declares its plan

@@ -23,7 +23,7 @@ object StatisticsQueries {
     * evaluation job at it.
     */
   def rankedEvents(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "stats.ranked:" + d) {
+    graft.Reuse.session(s, "stats.ranked:" + d) {
       // score statistics rank OBSERVED scores only: a NULL value has
       // no place in a (y, event_id) total order — Spark sorts NULLs
       // first, DuckDB last, and every consumer's oracle twin carries
@@ -33,7 +33,6 @@ object StatisticsQueries {
           (col("event_type") === "purchase").as("pos"),
           expr("cast(round(value * 100) as bigint)").as("y"))
       graft.api.Ranking.withRank(e, Nil, Seq(col("y"), col("event_id")))
-        .localCheckpoint()
     }
 
   /** The (event_type, integer-cents, count) value-compressed events
@@ -45,7 +44,7 @@ object StatisticsQueries {
     * binning, deviation build) runs on the compressed relation.
     */
   def compressedCents(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "stats.cents:" + d) {
+    graft.Reuse.session(s, "stats.cents:" + d) {
       // observed values only — NULL cents would ride the CDF as a
       // phantom group (Spark orders it first, DuckDB's quantile_cont
       // ignores it); consumers' oracle twins filter identically
@@ -53,7 +52,6 @@ object StatisticsQueries {
         .select(col("event_type"),
           expr("cast(round(value * 100) as bigint)").as("y"))
         .groupBy(col("event_type"), col("y")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
     }
 
   /** The per-type weighted CDF of [[compressedCents]] — (event_type,
@@ -66,10 +64,9 @@ object StatisticsQueries {
     * view/click restriction filters this relation directly.
     */
   def centsCdf(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "stats.centscdf:" + d) {
+    graft.Reuse.session(s, "stats.centscdf:" + d) {
       graft.api.Quantiles.cdfOf(
         compressedCents(s, d), Seq("event_type"), "y", "c")
-        .localCheckpoint()
     }
 
   /** Portable Bloom-filter membership audit — the compact-filter
@@ -459,7 +456,7 @@ object StatisticsQueries {
     // med and mad are 5-row relations each consumed by TWO branches
     // (deviation build + final join; flag test + final join) — cache
     // them or the whole upstream pipeline evaluates twice.
-    val med = graft.AutoUnpersist.scoped(
+    val med = graft.Reuse.query(
       graft.api.Quantiles.median2FromCdf(centsCdf(s, d), Seq("event_type"), "y"))
     // devComp is NOT cached: its only consumer is devCdf (itself
     // cached below), so a persist here would be pure overhead
@@ -473,9 +470,9 @@ object StatisticsQueries {
     // count) — build its CDF once, cache it, and read both answers off
     // it (the same pay-once shape as the cents CDF, scoped to this
     // query because dev depends on med).
-    val devCdf = graft.AutoUnpersist.scoped(
+    val devCdf = graft.Reuse.query(
       graft.api.Quantiles.cdfOf(devComp, Seq("event_type"), "dev", "c"))
-    val mad = graft.AutoUnpersist.scoped(
+    val mad = graft.Reuse.query(
       graft.api.Quantiles.median2FromCdf(devCdf, Seq("event_type"), "dev")
         .select(col("event_type"), col("med2").as("mad2")))
     val flagged = devCdf.join(broadcast(mad), "event_type")
@@ -801,11 +798,10 @@ object StatisticsQueries {
     * per (session, sf) like [[rankedEvents]]/[[compressedCents]].
     */
   def hourlySeries(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "stats.hourly:" + d) {
-      // durable through the catalog like the other shared families:
-      // the series is calendar-sized, but its BUILD scans all of
-      // events — the scan, not the rows, is what the memo saves
-      graft.api.MemoCatalog.readThrough(s, "hourly:" + d,
+    // durable through the catalog like the other shared families:
+    // the series is calendar-sized, but its BUILD scans all of
+    // events — the scan, not the rows, is what the memo saves
+    graft.Reuse.session(s, "hourly:" + d,
         Seq(Tables.events(s, d).select(col("ts")))) {
       val hc = Tables.events(s, d)
         .groupBy(date_trunc("hour", col("ts")).as("h"))
@@ -817,7 +813,6 @@ object StatisticsQueries {
         .select(col("h"), coalesce(col("x"), lit(0L)).as("x"))
         .withColumn("i",
           row_number().over(Window.orderBy(col("h"))).cast("long"))
-      }
     }
 
   /** Sample autocorrelation function of the hourly event-count series
@@ -1021,7 +1016,7 @@ object StatisticsQueries {
       .agg(
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("a"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("b"))
-    val ubc = graft.AutoUnpersist.scoped(ub)
+    val ubc = graft.Reuse.query(ub)
     // value-compressed average-tie rank maps: |support| rows, windowed
     // over THAT metadata relation only (the 20-row-spine precedent)
     def rankMap(keyCol: String): org.apache.spark.sql.DataFrame = {
@@ -1147,7 +1142,7 @@ object StatisticsQueries {
       |  (10000 * dau.dau) // wau.wau AS stickiness_bp
       |FROM dau JOIN wau ON wau.d = dau.d
       |ORDER BY day""".stripMargin) { (s, d) =>
-    val du = graft.AutoUnpersist.scoped(
+    val du = graft.Reuse.query(
       Tables.events(s, d)
         .select(date_trunc("day", col("ts")).as("dd"), col("user_id"))
         .distinct())
@@ -1668,7 +1663,8 @@ object StatisticsQueries {
       |  round(sl.slope, 4) AS ts_slope_cents,
       |  round(ic.r, 4) AS ts_intercept_cents
       |FROM np CROSS JOIN nn CROSS JOIN sl CROSS JOIN ic""".stripMargin) { (s, d) =>
-    val ser = Tables.load(s, d, "orders")
+    // 80-row metadata; consumed by pairs AND residuals
+    val ser = graft.Reuse.query(Tables.load(s, d, "orders")
       .groupBy(date_trunc("month", col("o_orderdate")).as("mo"))
       .agg(sum(expr("cast(round(o_totalprice * 100) as bigint)")).as("cents"))
       // NULLS LAST pinned on both engines: a NULL month (null
@@ -1676,8 +1672,7 @@ object StatisticsQueries {
       // (SURVEY §5, fuzz class A)
       .withColumn("i",
         row_number().over(Window.orderBy(col("mo").asc_nulls_last))
-          .cast("long"))
-      .localCheckpoint() // 80-row metadata; consumed by pairs AND residuals
+          .cast("long")))
     // theta self-join of the 80-row month metadata: broadcast the
     // right side so the plan is a BroadcastNestedLoopJoin, never a
     // CartesianProduct (the suite-wide PlanSpec gate)
@@ -1997,7 +1992,7 @@ object StatisticsQueries {
       .filter(col("n") > 0)
     // value-compressed (source, len) support — persisted: feeds the
     // grid, the per-source totals, and the corpus marginal
-    val c = graft.AutoUnpersist.scoped(
+    val c = graft.Reuse.query(
       t.groupBy(col("source"), col("n")).agg(count(lit(1)).as("m")))
     val lens = c.select(col("n")).distinct()
     val srcs = c.groupBy(col("source")).agg(sum(col("m")).as("ns"))

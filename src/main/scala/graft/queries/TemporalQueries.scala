@@ -611,7 +611,7 @@ object TemporalQueries {
     * analytic reads it.
     */
   def coalescedSpans(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "temporal.spans:" + d) {
+    graft.Reuse.session(s, "temporal.spans:" + d) {
       val iv = Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("ts").as("s"),
           (col("ts") + expr("INTERVAL 5 MINUTES")).as("e"))
@@ -629,7 +629,6 @@ object TemporalQueries {
           count(lit(1)).as("n_events"))
         .select(col("user_id"), col("span_start"), col("span_end"),
           col("n_events"))
-        .localCheckpoint()
     }
 
   val q132IntervalMerge = QueryDef(

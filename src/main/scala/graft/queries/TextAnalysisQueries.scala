@@ -636,7 +636,7 @@ object TextAnalysisQueries {
   private[graft] def nbScores(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graft.SessionMemo.getOrCompute(s, "text.nbscores:" + d) {
+    graft.Reuse.session(s, "text.nbscores:" + d) {
       val docs = Tables.documents(s, d)
       val tok = docs.select(col("doc_id"), col("lang"),
         explode(toks(col("text"))).as("t"))
@@ -672,7 +672,6 @@ object TextAnalysisQueries {
         .join(broadcast(pri), "lang")
         .groupBy(col("doc_id"), col("lang"))
         .agg((sum(col("lp")) + first(col("prior"))).as("score"))
-        .localCheckpoint()
     }
 
   val q199NaiveBayesLangid = QueryDef(
@@ -775,7 +774,7 @@ object TextAnalysisQueries {
     // statistic — cv/ns/g all DERIVE from the vocab×sources-bounded
     // sv relation (persisting the raw exploded token stream instead
     // read 3.5× on the 10× ladder; this shape is scan-bound)
-    val sv = graft.AutoUnpersist.scoped(Tables.documents(s, d)
+    val sv = graft.Reuse.query(Tables.documents(s, d)
       .select(col("source"), explode(toks(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c_sv")))
     val cv = sv.groupBy(col("term")).agg(sum(col("c_sv")).as("c_v"))
@@ -783,7 +782,7 @@ object TextAnalysisQueries {
     val g = sv.agg(sum(col("c_sv")).as("n"), countDistinct(col("term")).as("v"))
     // sc feeds the bounded top-5 aggregate AND the c_sv re-fetch join
     // below — persist for the query's scope
-    val sc = graft.AutoUnpersist.scoped(
+    val sc = graft.Reuse.query(
       sv.join(cv, "term").join(ns, "source").crossJoin(broadcast(g))
         .select(col("source"), col("term"), col("c_sv"),
           floor(lit(1000000.0) * log(
@@ -855,7 +854,7 @@ object TextAnalysisQueries {
       |FROM s CROSS JOIN tt""".stripMargin) { (s, d) =>
     // one corpus scan: the vocab counts are the finest statistic and
     // the corpus total derives from them (vocab-bounded relation)
-    val cv = graft.AutoUnpersist.scoped(Tables.documents(s, d)
+    val cv = graft.Reuse.query(Tables.documents(s, d)
       .select(explode(toks(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("c")))
     val rk = graft.api.Ranking.withRank(cv, Seq.empty,
@@ -1040,7 +1039,7 @@ object TextAnalysisQueries {
       |ORDER BY src_a, src_b""".stripMargin) { (s, d) =>
     // vocab×|sources|-bounded; feeds three branches — persist for the
     // query's scope so the corpus tokenization runs once
-    val cv = graft.AutoUnpersist.scoped(Tables.documents(s, d)
+    val cv = graft.Reuse.query(Tables.documents(s, d)
       .select(col("source"), explode(toks(col("text"))).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c")))
     val tok = cv.select(col("token")).distinct()

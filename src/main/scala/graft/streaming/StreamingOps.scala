@@ -865,7 +865,7 @@ object StreamingOps {
         val spark = batch.sparkSession
         val ix = graft.api.IncrementalDedup.readIndex(spark, indexDir)
         // one postings pass serves BOTH the probe and the append
-        graft.api.IncrementalDedup.withPostings(batch.toDF()) { posts =>
+        graft.Reuse.within(graft.queries.DedupQueries.shinglePostingsOf(batch.toDF())) { posts =>
           sink(graft.api.IncrementalDedup.probePairs(posts, ix, threshold), id)
           // foreachBatch is at-least-once: a replayed batch must not
           // re-append (the index would grow duplicate rows forever).

@@ -36,7 +36,7 @@ object MemoRacer {
   def main(args: Array[String]): Unit = {
     val root = args(0)
     val name = args(1)
-    val tag = args(2)
+    // args(2) is the racer's tag: it only names the process to its caller
     val phases = args(3).toInt
     val reads = args(4).toInt
     val spark = graft.GraftSession.create("local[2]")

@@ -141,7 +141,7 @@ class AnnIndexSpec extends SparkSpec {
     // tombstone every query's current top neighbors (the hardest case:
     // the deleted ids are exactly the ones search wants to return)
     val doomed = before.map(_._2).distinct.take(8)
-    AnnIndex.delete(spark, d, doomed.toSeq.toDF("vec_id"))
+    AnnIndex.delete(d, doomed.toSeq.toDF("vec_id"))
     val after = AnnIndex.search(spark, d, queriesDF, nprobe = 7, topk = 10)
       .select(col("q_id"), col("n_id")).as[(Long, Long)].collect()
     assert(after.nonEmpty)

@@ -130,12 +130,12 @@ class AutoTuneSpec extends SparkSpec {
     // candidate set must come out EMPTY)
     spark.conf.set(DedupQueries.ShingleDfCapConf, "1")
     try {
-      graft.SessionMemo.invalidate(spark, "dedup.ngramcand:" + sfDir)
+      graft.Reuse.invalidate(spark, "ngramcand:" + sfDir)
       val n = Registry.byName("q36_ngram_jaccard").fn(spark, sfDir).count()
       assert(n == 0L, s"cap=1 must empty the candidate join, got $n pairs")
     } finally {
       spark.conf.unset(DedupQueries.ShingleDfCapConf)
-      graft.SessionMemo.invalidate(spark, "dedup.ngramcand:" + sfDir)
+      graft.Reuse.invalidate(spark, "ngramcand:" + sfDir)
     }
   }
 }

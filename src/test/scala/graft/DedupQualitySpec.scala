@@ -711,7 +711,7 @@ class DedupQualitySpec extends SparkSpec {
     // floor for J in [0.49995, 0.5) — a corpus-dependent fragility in
     // the SPEC, not an engine defect; round-9 verdict task 7.)
     // plain persist (two actions follow; the end-of-test clearCache
-    // releases it — AutoUnpersist would free after the first count)
+    // releases it — Reuse.query would free after the first count)
     val cand = queries.DedupQueries.ngramCandidateCounts(
       queries.DedupQueries.shinglePostingsOf(Tables.documents(spark, sfDir)),
       queries.DedupQueries.ShingleDfFloor).persist()

@@ -45,7 +45,7 @@ class LifecycleSpec extends SparkSpec {
 
   test("AutoUnpersist ignores unrelated concurrent executions") {
     spark.sharedState.cacheManager.clearCache()
-    val cached = AutoUnpersist.scoped(
+    val cached = Reuse.query(
       Tables.documents(spark, sfDir).select("doc_id"))
     // an unrelated action must NOT release the scoped cache
     Tables.events(spark, sfDir).limit(10).count()
@@ -55,5 +55,28 @@ class LifecycleSpec extends SparkSpec {
     // the owning action does release it
     cached.count()
     assert(awaitEmptyCache(10000), "owning action failed to release cache")
+  }
+
+  test("Reuse.within returns f's value and releases its cache") {
+    spark.sharedState.cacheManager.clearCache()
+    val docs = Tables.documents(spark, sfDir).select("doc_id")
+    val n = Reuse.within(docs) { cached =>
+      assert(!spark.sharedState.cacheManager.isEmpty, "within did not cache its input")
+      cached.count()
+    }
+    assert(n == docs.count())
+    assert(awaitEmptyCache(10000), "within left its cache behind after f returned")
+  }
+
+  test("Reuse.within releases its cache when f throws") {
+    spark.sharedState.cacheManager.clearCache()
+    val boom = intercept[IllegalStateException] {
+      Reuse.within(Tables.documents(spark, sfDir).select("doc_id")) { cached =>
+        cached.count()
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(boom.getMessage == "boom")
+    assert(awaitEmptyCache(10000), "within left its cache behind after f threw")
   }
 }

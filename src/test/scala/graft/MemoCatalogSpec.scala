@@ -163,51 +163,6 @@ class MemoCatalogSpec extends SparkSpec {
     assert(orphans.isEmpty, s"leaked checksum sidecars: $orphans")
   }
 
-  test("versioned token: reuse without ANY input scan; stale token rebuilds") {
-    val root = freshRoot()
-    var builds = 0
-    def get(token: String, tag: String): Set[String] = withMemoDir(root) {
-      MemoCatalog.readThroughVersioned(spark, "mver", token) {
-        builds += 1
-        corpus(tag).select(col("txt"))
-      }.collect().map(_.getString(0)).toSet
-    }
-    assert(get("snap-001", "a") == Set("alpha a", "beta a", "gamma a"))
-    assert(builds == 1)
-    // warm reuse: the build closure must never run — readThroughVersioned
-    // takes no input relations, so reuse is zero-scan BY CONSTRUCTION
-    // (there is nothing to fingerprint); prove the closure stays cold
-    val reused = withMemoDir(root) {
-      MemoCatalog.readThroughVersioned(spark, "mver", "snap-001") {
-        fail("build must not run on a token match"); corpus("a")
-      }.collect().map(_.getString(0)).toSet
-    }
-    assert(reused == Set("alpha a", "beta a", "gamma a"))
-    // stale token ⇒ rebuild, and the served relation reflects the new build
-    assert(get("snap-002", "b") == Set("alpha b", "beta b", "gamma b"),
-      "stale token served the old snapshot's memo")
-    assert(builds == 2)
-    // returning to a previously-seen token is a MISMATCH against the
-    // live manifest (tokens are not a history): rebuild again
-    assert(get("snap-001", "a") == Set("alpha a", "beta a", "gamma a"))
-    assert(builds == 3)
-    // token keyspace is disjoint from fingerprints: an unversioned
-    // readThrough on the same name never aliases a token-built memo
-    val viaFp = withMemoDir(root) {
-      MemoCatalog.readThrough(spark, "mver", Seq(corpus("a"))) {
-        builds += 1; corpus("a").select(col("txt"))
-      }.collect().map(_.getString(0)).toSet
-    }
-    assert(viaFp == Set("alpha a", "beta a", "gamma a") && builds == 4,
-      "fingerprint mode aliased a version-token memo")
-    // conf off: pass-through, like readThrough
-    assert(spark.conf.getOption(MemoCatalog.DirConf).isEmpty)
-    val pt = MemoCatalog.readThroughVersioned(spark, "mver", "snap-001") {
-      builds += 1; corpus("c").select(col("txt"))
-    }
-    assert(pt.count() == 3 && builds == 5)
-  }
-
   test("manifest naming a missing data dir recovers by rebuild") {
     val root = freshRoot()
     var builds = 0
@@ -278,9 +233,9 @@ class MemoCatalogSpec extends SparkSpec {
   test("corpusCentroids reads through the catalog: Lloyd training skipped on the second session-cleared run") {
     val root = freshRoot()
     withMemoDir(root) {
-      SessionMemo.invalidate(spark, s"sim.cents:$sfDir:16:4")
-      SessionMemo.invalidate(spark, "sem.assigned:" + sfDir)
-      SessionMemo.invalidate(spark, "sem.pairs:" + sfDir)
+      Reuse.invalidate(spark, s"cents:$sfDir:16:4")
+      Reuse.invalidate(spark, "sem.assigned:" + sfDir)
+      Reuse.invalidate(spark, "sempairs:" + sfDir)
       val a = Registry.byName("q89_semantic_dedup").fn(spark, sfDir).collect()
       assert(a.nonEmpty)
       val names = new java.io.File(root).listFiles()
@@ -295,28 +250,28 @@ class MemoCatalogSpec extends SparkSpec {
       // a fresh process = no session memo; the catalog must serve the
       // trained centroids without re-running the Lloyd rounds (same
       // data dir nonce ⇒ build skipped), and the result must match
-      SessionMemo.invalidate(spark, s"sim.cents:$sfDir:16:4")
-      SessionMemo.invalidate(spark, "sem.assigned:" + sfDir)
-      SessionMemo.invalidate(spark, "sem.pairs:" + sfDir)
+      Reuse.invalidate(spark, s"cents:$sfDir:16:4")
+      Reuse.invalidate(spark, "sem.assigned:" + sfDir)
+      Reuse.invalidate(spark, "sempairs:" + sfDir)
       val b = Registry.byName("q89_semantic_dedup").fn(spark, sfDir).collect()
       assert(b.map(_.toString).sorted.toSeq == a.map(_.toString).sorted.toSeq,
         "catalog-served centroids changed the dedup decision")
       assert(dataDirs() == before,
         "second entry re-trained instead of reusing the durable centroids")
     }
-    SessionMemo.invalidate(spark, s"sim.cents:$sfDir:16:4")
-    SessionMemo.invalidate(spark, "sem.assigned:" + sfDir)
-    SessionMemo.invalidate(spark, "sem.pairs:" + sfDir)
+    Reuse.invalidate(spark, s"cents:$sfDir:16:4")
+    Reuse.invalidate(spark, "sem.assigned:" + sfDir)
+    Reuse.invalidate(spark, "sempairs:" + sfDir)
     spark.sharedState.cacheManager.clearCache()
   }
 
   test("round-15 families (ngramcand/suflcp/qranks/hourly) read through the catalog") {
     val root = freshRoot()
     val familyKeys = Seq(
-      "dedup.ngramcand:" + sfDir,
-      s"hygiene.suflcp:$sfDir:64",
-      "retrieval.qranks:" + sfDir,
-      "stats.hourly:" + sfDir)
+      "ngramcand:" + sfDir,
+      s"suflcp:$sfDir:64",
+      "qranks:" + sfDir,
+      "hourly:" + sfDir)
     val consumers = Seq(
       "q36_ngram_jaccard" -> "ngramcand",
       "q179_exactsubstr_spans" -> "suflcp",
@@ -329,7 +284,7 @@ class MemoCatalogSpec extends SparkSpec {
           .map(_.getName).sorted.mkString(",")
       }.toMap
     withMemoDir(root) {
-      familyKeys.foreach(SessionMemo.invalidate(spark, _))
+      familyKeys.foreach(Reuse.invalidate(spark, _))
       val first = consumers.map { case (q, _) =>
         q -> Registry.byName(q).fn(spark, sfDir).collect()
           .map(_.toString).sorted.toSeq
@@ -343,7 +298,7 @@ class MemoCatalogSpec extends SparkSpec {
       // fresh-process simulation: drop the session layer, re-run —
       // results identical and NO data dir rebuilt (same nonce)
       val before = dataDirs()
-      familyKeys.foreach(SessionMemo.invalidate(spark, _))
+      familyKeys.foreach(Reuse.invalidate(spark, _))
       consumers.foreach { case (q, _) =>
         val again = Registry.byName(q).fn(spark, sfDir).collect()
           .map(_.toString).sorted.toSeq
@@ -352,7 +307,7 @@ class MemoCatalogSpec extends SparkSpec {
       assert(dataDirs() == before,
         "second run rebuilt a family instead of reusing the durable memo")
     }
-    familyKeys.foreach(SessionMemo.invalidate(spark, _))
+    familyKeys.foreach(Reuse.invalidate(spark, _))
     spark.sharedState.cacheManager.clearCache()
   }
 
@@ -368,7 +323,7 @@ class MemoCatalogSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$snap/$t.parquet")
     }
     def run(): Seq[String] = withMemoDir(root) {
-      SessionMemo.invalidate(spark, "dedup.ngramcand:" + snap)
+      Reuse.invalidate(spark, "ngramcand:" + snap)
       Registry.byName("q36_ngram_jaccard").fn(spark, snap).collect()
         .map(_.toString).sorted.toSeq
     }
@@ -406,8 +361,8 @@ class MemoCatalogSpec extends SparkSpec {
       // other suites in this JVM may have warmed the SESSION memo with
       // the catalog off — drop it so the first run exercises the
       // catalog's build path rather than short-circuiting above it
-      SessionMemo.invalidate(spark, "dedup.clusters:" + sfDir)
-      SessionMemo.invalidate(spark, "sem.pairs:" + sfDir)
+      Reuse.invalidate(spark, "clusters:" + sfDir)
+      Reuse.invalidate(spark, "sempairs:" + sfDir)
       val a = Registry.byName("q78_dup_clusters").fn(spark, sfDir).collect()
       val s234 = Registry.byName("q234_semantic_split").fn(spark, sfDir).collect()
       assert(a.nonEmpty && s234.nonEmpty)
@@ -425,8 +380,8 @@ class MemoCatalogSpec extends SparkSpec {
             .map(_.getName).sorted.mkString(",")
         }.toMap
       val before = dataDirs()
-      SessionMemo.invalidate(spark, "dedup.clusters:" + sfDir)
-      SessionMemo.invalidate(spark, "sem.pairs:" + sfDir)
+      Reuse.invalidate(spark, "clusters:" + sfDir)
+      Reuse.invalidate(spark, "sempairs:" + sfDir)
       val a2 = Registry.byName("q78_dup_clusters").fn(spark, sfDir).collect()
       val s2 = Registry.byName("q93_leakage_safe_split").fn(spark, sfDir).collect()
       assert(a2.map(_.toString).sorted.toSeq == a.map(_.toString).sorted.toSeq,
@@ -437,35 +392,9 @@ class MemoCatalogSpec extends SparkSpec {
     }
     // don't leave catalog-backed relations in the session memo for
     // later suites that run with the catalog off
-    SessionMemo.invalidate(spark, "dedup.clusters:" + sfDir)
-    SessionMemo.invalidate(spark, "sem.pairs:" + sfDir)
+    Reuse.invalidate(spark, "clusters:" + sfDir)
+    Reuse.invalidate(spark, "sempairs:" + sfDir)
     spark.sharedState.cacheManager.clearCache()
-  }
-
-  test("version tokens that sanitize identically do not alias (injective key)") {
-    // round-17 ADVICE: sanitize() folds ':' and '_' to the same '_',
-    // so raw tokens "snap:1" and "snap_1" used to share a memo key —
-    // a warm reuse could silently serve the other version's data,
-    // breaking the same-token-same-content contract. The key now
-    // appends a hash of the RAW token bytes.
-    val root = freshRoot()
-    var builds = 0
-    def get(token: String, tag: String): Set[String] = withMemoDir(root) {
-      MemoCatalog.readThroughVersioned(spark, "minj", token) {
-        builds += 1
-        corpus(tag).select(col("txt"))
-      }.collect().map(_.getString(0)).toSet
-    }
-    assert(get("snap:1", "a") == Set("alpha a", "beta a", "gamma a"))
-    assert(builds == 1)
-    // the colliding-sanitization token MUST rebuild and serve its own
-    // content, not the other token's memo
-    assert(get("snap_1", "b") == Set("alpha b", "beta b", "gamma b"),
-      "sanitize-colliding token served the other version's data")
-    assert(builds == 2)
-    // and the same raw token still warm-reuses (the key is stable)
-    assert(get("snap_1", "b") == Set("alpha b", "beta b", "gamma b"))
-    assert(builds == 2, "same raw token failed to reuse")
   }
 
   /** The round-17 verdict's task 7: production contention is two

@@ -643,7 +643,7 @@ class PlanSpec extends SparkSpec {
     // gate made suite-wide; the WindowExec WARN suppression in
     // SparkSpec is justified by exactly this gate.
     // gate on the ANALYZED plan: cache substitution (withCachedData)
-    // would replace AutoUnpersist-scoped aggregates with opaque
+    // would replace Reuse.query-scoped aggregates with opaque
     // InMemoryRelation leaves and hide the compressor that proves the
     // window metadata-sized
     import org.apache.spark.sql.catalyst.plans.logical._

@@ -18,8 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * master is fixed at context creation. Suites run sequentially in
   * the one forked test JVM, so stopping the shared session here is
   * safe: the next suite's `getOrCreate` builds a fresh one, and
-  * every cross-query memo (SessionMemo) is keyed on the session
-  * object, so nothing stale survives the swap.
+  * every cross-query memo (`Reuse.session`, `Reuse.value`) is keyed
+  * on the session object, so nothing stale survives the swap.
   */
 object ResilienceSpec {
   // local mode runs tasks in this JVM, so a static counter observes
